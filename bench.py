@@ -350,6 +350,15 @@ def bench_frontier(spark: SparkSession, n: int) -> dict:
     }
 
 
+def queries_note(n_queries: int, full_path: str | None) -> str:
+    """The compact line's pointer to the full per-query map; names the file
+    only when it was written (a failed write leaves ``full_path`` None)."""
+    if not n_queries:
+        return "queries skipped (BENCH_SKIP_QUERIES); frontier-only run"
+    note = f"top-5 slowest of {n_queries}; full map on the line above"
+    return note + (f" and in {full_path}" if full_path else "")
+
+
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -434,11 +443,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": slowest,
-                "queries_note": (
-                    f"top-5 slowest of {len(queries)}; full map on the line above and in {full_path}"
-                    if queries
-                    else "queries skipped (BENCH_SKIP_QUERIES); frontier-only run"
-                ),
+                "queries_note": queries_note(len(queries), full_path),
                 "queries_total_sec": round(sum(queries.values()), 3),
                 "sf": float(sf),
                 "cpus": cpus,

@@ -478,7 +478,10 @@ def find_catalogs(root: str, max_depth: int = 2) -> list[str]:
     # followlinks: operators commonly gather crawl workdirs under one root
     # via symlinks; the max_depth bound prevents cycles from mattering
     for dirpath, dirnames, filenames in os.walk(root, followlinks=True):
-        depth = dirpath[len(root):].count(os.sep)
+        # relpath: a root of '/' keeps its trailing separator, which a
+        # prefix slice would turn into one level too few
+        rel = os.path.relpath(dirpath, root)
+        depth = 0 if rel == os.curdir else rel.count(os.sep) + 1
         if "CURRENT" in filenames or "_commits" in dirnames:
             found.append(dirpath)
             dirnames[:] = []  # don't descend into a catalog's own tables
@@ -486,6 +489,22 @@ def find_catalogs(root: str, max_depth: int = 2) -> list[str]:
         if depth >= max_depth:
             dirnames[:] = []
     return sorted(found)
+
+
+def status_workdirs(workdirs: list[str], root: str | None = None) -> list[str]:
+    """The ``status`` listing's catalogs: the explicit ``workdirs``, then
+    those discovered under ``root``, each catalog once by realpath with the
+    first path seen kept. Discovery follows symlinks, so two links under
+    ``root`` (or a link and an explicit ``--workdir``) can name one catalog."""
+    import os
+
+    out, seen = [], set()
+    for wd in [*workdirs, *(find_catalogs(root) if root else [])]:
+        real = os.path.realpath(wd)
+        if real not in seen:
+            seen.add(real)
+            out.append(wd)
+    return out
 
 
 def workdir_status(spark: SparkSession, workdirs: list[str]) -> list[dict]:

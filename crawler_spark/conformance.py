@@ -19,6 +19,9 @@ local test failure (tests/test_queries_oracle.py) and a
 
 from __future__ import annotations
 
+from datetime import date
+from decimal import Decimal
+
 import numpy as np
 import pandas as pd
 
@@ -51,7 +54,9 @@ def _cell_unhashable(v) -> bool:
     # pd.isna return an elementwise array whose truthiness raises
     if isinstance(v, (list, tuple, set, dict, np.ndarray)):
         return True
-    if v is None or isinstance(v, (str, bytes, float, int, bool)):
+    # DECIMAL / DATE / TIMESTAMP cells arrive as these hashable scalars
+    # (datetime is a date subclass)
+    if v is None or isinstance(v, (str, bytes, float, int, bool, Decimal, date)):
         return False
     try:
         return not (isinstance(v, type(pd.NaT)) or bool(pd.isna(v)))

@@ -26,7 +26,7 @@ from urllib.parse import parse_qs, unquote, urlencode, urljoin, urlparse, urlunp
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 # --- constants (reference: validator.py:20-47) -------------------------------
 
@@ -211,28 +211,81 @@ def host_of(url: str) -> str:
         return ""
 
 
+def link_urls(href: str | None, base_url: str | None):
+    """One discovered link through the whole chain: resolve (T5) -> validate
+    (F1) -> normalize (F2) -> canonicalize (F3).
+
+    Returns ``(absolute, norm, canonical)``. ``absolute`` is None for a
+    skipped, unresolvable or invalid link (nothing else is then set);
+    ``norm`` and ``canonical`` are None where normalization fails.
+    """
+    absolute = resolve_link(href, base_url)
+    if absolute is None or not is_valid_url(absolute):
+        return None, None, None
+    norm = normalize_url(absolute)
+    if norm is None:
+        return absolute, None, None
+    return absolute, norm, canonicalize_url(norm)
+
+
+def sitemap_urls(url: str | None):
+    """One sitemap ``<loc>``: normalize -> validate the normalized URL ->
+    canonicalize. Returns ``(norm, canonical)``, both None when the URL
+    does not normalize or its normalized form is invalid."""
+    norm = normalize_url(url) if url is not None else None
+    if norm is None or not is_valid_url(norm):
+        return None, None
+    return norm, canonicalize_url(norm)
+
+
 # --- Arrow-vectorized pandas UDFs (no per-row Python on the Spark path) ------
+#
+# Each URL chain is ONE Arrow UDF evaluated once per row. A Python stage
+# costs about 0.2-0.25 s of worker CPU per task on PySpark 4.1 / Python 3.11
+# whatever its row count (an identity UDF over 7,000 rows at local[4]: 0.25 s
+# in 1 task, 2.1 s in 8, 8.5 s in 32). Most of it is the worker's
+# setup_spark_files -> importlib.invalidate_caches(): on Python 3.11 every
+# zipimporter over pyspark.zip (14-16 of them) then re-reads the archive's
+# 1,328-entry directory. The pure-Python chain itself is ~40 us per link, so
+# splitting it across several UDFs or stages multiplies a fixed cost that
+# dwarfs the work.
+#
+# The UDFs are marked nondeterministic so the optimizer never copies them
+# into a pushed-down filter or a collapsed projection (the split chain ran
+# six UDF calls per row that way); the functions are pure, so results are
+# unchanged. Guarded by
+# tests/test_plans.py::test_round_evaluates_url_python_once_per_link.
 
-@pandas_udf(BooleanType())
-def is_valid_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: is_valid_url(u) if u is not None else False)
+LINK_URLS_TYPE = StructType([
+    StructField("absolute", StringType()),
+    StructField("norm", StringType()),
+    StructField("canonical", StringType()),
+])
+
+SITEMAP_URLS_TYPE = StructType([
+    StructField("norm", StringType()),
+    StructField("canonical", StringType()),
+])
 
 
-@pandas_udf(StringType())
-def normalize_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: normalize_url(u) if u is not None else None)
-
-
-@pandas_udf(StringType())
-def canonicalize_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
-
-
-@pandas_udf(StringType())
-def resolve_link_udf(hrefs: pd.Series, bases: pd.Series) -> pd.Series:
-    return pd.Series(
-        [resolve_link(h, b) for h, b in zip(hrefs, bases)], dtype="object"
+@pandas_udf(LINK_URLS_TYPE)
+def link_urls_udf(hrefs: pd.Series, bases: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [link_urls(h, b) for h, b in zip(hrefs, bases)],
+        columns=LINK_URLS_TYPE.names, dtype="object",
     )
+
+
+@pandas_udf(SITEMAP_URLS_TYPE)
+def sitemap_urls_udf(urls: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [sitemap_urls(u) for u in urls],
+        columns=SITEMAP_URLS_TYPE.names, dtype="object",
+    )
+
+
+link_urls_udf = link_urls_udf.asNondeterministic()
+sitemap_urls_udf = sitemap_urls_udf.asNondeterministic()
 
 
 def host_col(url_col):

@@ -23,13 +23,11 @@ from pyspark.sql import Window
 from crawler_spark.config import CrawlConfig
 from crawler_spark.functions.urls import (
     canonicalize_url,
-    canonicalize_url_udf,
     host_bucket_col,
     host_col,
     host_of,
-    is_valid_url_udf,
     normalize_url,
-    normalize_url_udf,
+    sitemap_urls_udf,
     url_hash_col,
 )
 from crawler_spark.plans.round import FRONTIER_COLS, run_round
@@ -102,10 +100,12 @@ def init_state(
                 priority=cfg.sitemap_priority,
                 depth=cfg.sitemap_depth,
             )
-            .withColumn("norm", normalize_url_udf(F.col("url")))
+            # normalize -> validate -> canonicalize in one Python pass per URL
+            .withColumn("u", sitemap_urls_udf(F.col("url")))
+            .withColumn("norm", F.col("u.norm"))
+            .withColumn("canonical", F.col("u.canonical"))
+            .drop("u")
             .where(F.col("norm").isNotNull())
-            .where(is_valid_url_udf(F.col("norm")))
-            .withColumn("canonical", canonicalize_url_udf(F.col("norm")))
         )
         first = Window.partitionBy("canonical").orderBy("sitemap_ord", "sitemap_pos")
         sm_rows = (

@@ -198,15 +198,7 @@ def main() -> None:
     elif args.cmd == "status":
         if not args.root and not args.workdir:
             p.error("status: need --root or at least one --workdir")
-        wds = list(args.workdir or [])
-        if args.root:
-            # dedup by realpath: --root discovery commonly returns symlink
-            # paths for catalogs also named explicitly via --workdir
-            seen = {os.path.realpath(w) for w in wds}
-            wds += [
-                w for w in analytics.find_catalogs(args.root)
-                if os.path.realpath(w) not in seen
-            ]
+        wds = analytics.status_workdirs(args.workdir or [], args.root)
         print(json.dumps(analytics.workdir_status(spark, wds),
                          indent=2, default=str))
     elif args.cmd == "expire":

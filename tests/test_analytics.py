@@ -503,3 +503,53 @@ def test_workdir_status_lists_sessions(spark, crawl, second_crawl, tmp_path):
     rows2 = analytics.workdir_status(spark, [empty])
     assert rows2[0]["round"] == -1
     assert rows2[0]["queue"]["total_urls"] == 0
+
+
+def test_find_catalogs_depth_from_filesystem_root(monkeypatch):
+    """The depth bound counts components below ``root`` even when root is
+    '/' (whose abspath keeps its separator): max_depth=1 visits '/' and its
+    children, never a grandchild."""
+    import os
+
+    visited = []
+
+    def fake_walk(top, followlinks=False):
+        # a tree with directories three levels deep that honors pruning
+        stack = [top]
+        while stack:
+            d = stack.pop()
+            visited.append(d)
+            names = [] if d.count("/") >= 3 else ["a", "b"]
+            dirnames = list(names)
+            yield d, dirnames, []
+            stack.extend(os.path.join(d, n) for n in reversed(dirnames))
+
+    monkeypatch.setattr(os, "walk", fake_walk)
+    assert analytics.find_catalogs("/", max_depth=1) == []
+    assert sorted(visited) == ["/", "/a", "/b"]
+    visited.clear()
+    analytics.find_catalogs("/a", max_depth=1)
+    assert sorted(visited) == ["/a", "/a/a", "/a/b"]
+
+
+def test_status_workdirs_dedups_discovered_catalogs(tmp_path):
+    """Two symlinks under --root naming one catalog list it once, as the
+    first path seen; an explicit --workdir still wins over discovery."""
+    import os
+
+    real = tmp_path / "real" / "cat1"
+    other = tmp_path / "real" / "cat2"
+    for d in (real, other):
+        os.makedirs(d)
+        (d / "CURRENT").write_text("")
+    root = tmp_path / "crawls"
+    os.makedirs(root)
+    os.symlink(real, root / "a_link")
+    os.symlink(real, root / "b_link")
+    os.symlink(other, root / "c_link")
+
+    got = analytics.status_workdirs([], str(root))
+    assert got == [str(root / "a_link"), str(root / "c_link")]
+    got = analytics.status_workdirs([str(real)], str(root))
+    assert got == [str(real), str(root / "c_link")]
+    assert analytics.status_workdirs([str(real), str(root / "b_link")]) == [str(real)]

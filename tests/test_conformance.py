@@ -72,3 +72,15 @@ def test_frame_hash_is_dtype_sensitive():
     b = canon(pd.DataFrame({"x": [1_000_000.0, 2.0]}))
     assert frame_hash(a) != frame_hash(b)
     assert frame_hash(a) == frame_hash(canon(pd.DataFrame({"x": [2, 1_000_000]})))
+
+
+def test_decimal_and_date_cells_are_hashable_scalars():
+    # DECIMAL / DATE / TIMESTAMP outputs reach pandas as these objects; they
+    # hash fine and must not be reported as unhashable cells
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    for v in (Decimal("1.50"), date(2024, 1, 2), datetime(2024, 1, 2, 3, 4)):
+        assert not _cell_unhashable(v), v
+    pdf = pd.DataFrame({"d": [Decimal("1.5"), Decimal("2")], "t": [date(2024, 1, 2)] * 2})
+    assert conformance_errors(_Schema({"d": "decimal(10,2)", "t": "date"}), pdf) == []

@@ -10,6 +10,8 @@ tests over the compiled plans (no job execution; ``explain`` strings only).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from crawler_spark.queries import REGISTRY
@@ -235,3 +237,83 @@ def test_all_denied_round_commits_skipped_and_drains(spark, tmp_path):
     assert statuses == {"skipped"}
     # and it took ONE real round + the empty-frontier probe, not max_rounds
     assert out["last_round"] <= 1
+
+
+_PY_EVAL = re.compile(r"\w*EvalPython \[.*")
+
+
+def _python_nodes(plan: str) -> set[str]:
+    """Distinct Python-evaluation nodes of an executed-plan tree string,
+    cached relations included (their inner plans print under
+    InMemoryRelation, once more as AQE's initial plan once materialized)."""
+    return {m.group(0) for m in _PY_EVAL.finditer(plan)}
+
+
+def test_round_evaluates_url_python_once_per_link(spark, tmp_path, monkeypatch):
+    """The round's URL chain (resolve -> validate -> normalize -> canonicalize)
+    is ONE Arrow UDF call in ONE Python node, under the links write; every
+    other plan the round executes (the fresh anti-join, the dirty-bucket
+    collect, the frontier and seen writes, the counts) reaches Python only
+    through that same node in the persisted links frame. A Python stage
+    costs a fixed ~0.2 s of worker CPU per task, and the split chain ran six
+    UDF calls per row across four nodes (filter pushdown duplicated
+    resolve and normalize)."""
+    from crawler_spark import tables
+    from crawler_spark.config import CrawlConfig
+    from crawler_spark.plans.engine import run_crawl
+    from crawler_spark.sources.corpus import (
+        gen_corpus, to_documents_df, to_robots_df,
+    )
+
+    documents, seeds, robots = gen_corpus(hosts=3, pages_per_host=8, seed=5)
+    docs_df = to_documents_df(spark, documents)
+    robots_df = to_robots_df(spark, robots)
+    plans: list[tuple[str, str]] = []
+
+    def record(label, df):
+        plans.append((label, df._jdf.queryExecution().executedPlan().toString()))
+
+    write, seen_append = tables.RoundCommit._write, tables.RoundCommit.stage_seen_append
+    DF = type(docs_df)
+    collect, count = DF.collect, DF.count
+
+    def recording_write(self, table, df, partition_by):
+        if self.round_no >= 0:  # not the seed commit of init_state
+            record(table, df)
+        return write(self, table, df, partition_by)
+
+    def recording_seen_append(self, spark_, df):
+        record("url_seen", df)
+        return seen_append(self, spark_, df)
+
+    def recording_collect(self):
+        record("collect", self)
+        return collect(self)
+
+    def recording_count(self):
+        record("count", self)
+        return count(self)
+
+    monkeypatch.setattr(tables.RoundCommit, "_write", recording_write)
+    monkeypatch.setattr(tables.RoundCommit, "stage_seen_append", recording_seen_append)
+    monkeypatch.setattr(DF, "collect", recording_collect)
+    monkeypatch.setattr(DF, "count", recording_count)
+    out = run_crawl(
+        spark, str(tmp_path / "wd"), docs_df, robots_df, seeds,
+        CrawlConfig(max_pages=10, max_rounds=1, n_host_buckets=4),
+    )
+    monkeypatch.undo()
+    assert out["rounds"][0]["fresh"] > 0  # the round did discover links
+
+    links = [p for label, p in plans if label == "links"]
+    assert len(links) == 1
+    nodes = _python_nodes(links[0])
+    assert len(nodes) == 1, nodes
+    (node,) = nodes
+    assert node.startswith("ArrowEvalPython [link_urls_udf("), node
+    results = node.split("], [", 1)[1]
+    assert len(re.findall(r"pythonUDF\d+#", results)) == 1, node
+    labels = {label for label, _ in plans}
+    assert {"frontier", "url_seen", "collect"} <= labels, labels
+    for label, plan in plans:
+        assert _python_nodes(plan) <= nodes, (label, _python_nodes(plan) - nodes)

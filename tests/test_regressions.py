@@ -386,3 +386,13 @@ def test_all_scripts_parse():
     assert scripts
     for path in scripts:
         ast.parse(path.read_text(), filename=str(path))
+
+
+def test_bench_queries_note_never_points_at_none():
+    # a failed queries_full.json write leaves full_path None; the compact
+    # line must then not name a file ("... and in None")
+    import bench
+
+    assert bench.queries_note(7, None) == "top-5 slowest of 7; full map on the line above"
+    assert bench.queries_note(7, "/x/q.json").endswith(" and in /x/q.json")
+    assert "skipped" in bench.queries_note(0, None)

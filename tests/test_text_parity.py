@@ -85,16 +85,15 @@ def test_word_frequencies_match(spark, unit_corpus):
 
 def test_link_extraction_matches(spark, unit_corpus):
     """T5/O6 — ordered-distinct valid links vs oracle, whole corpus."""
-    from crawler_spark.functions.urls import is_valid_url_udf, resolve_link_udf
+    from crawler_spark.functions.urls import link_urls_udf
 
     documents, _, _ = unit_corpus
     df = to_documents_df(spark, documents)
     exploded = (
         df.select("doc_id", F.posexplode(X.link_spans(F.col("spans"))).alias("pos", "span"))
         .select("doc_id", "pos", F.col("span.text").alias("href"))
-        .withColumn("absolute", resolve_link_udf(F.col("href"), F.col("doc_id")))
+        .withColumn("absolute", link_urls_udf(F.col("href"), F.col("doc_id"))["absolute"])
         .where(F.col("absolute").isNotNull())
-        .where(is_valid_url_udf(F.col("absolute")))
     )
     # ordered distinct: first occurrence per (doc, absolute)
     from pyspark.sql import Window

@@ -130,7 +130,8 @@ def test_host_of():
 
 
 def test_spark_udfs_match_python(spark):
-    """The pandas-UDF wrappers must agree with the plain functions."""
+    """The fused pandas UDFs must agree, column by column, with the plain
+    functions they compose."""
     from pyspark.sql import functions as F
 
     from crawler_spark.functions import urls as U
@@ -141,22 +142,42 @@ def test_spark_udfs_match_python(spark):
         "http://e.com/file.pdf",
         "notaurl",
         "http://e.com/p?page=007&ref=tw",
+        "mailto:a@e.com",
+        "#top",
     ]
-    df = spark.createDataFrame([(s,) for s in samples], ["url"])
+    base = "http://base.test/dir/"
+    df = spark.createDataFrame([(s, base) for s in samples], ["url", "base"])
     rows = (
         df.select(
             "url",
-            U.is_valid_url_udf("url").alias("valid"),
-            U.normalize_url_udf("url").alias("norm"),
-            U.canonicalize_url_udf("url").alias("canon"),
+            U.link_urls_udf("url", "base").alias("link"),
+            U.sitemap_urls_udf("url").alias("sm"),
             U.host_col(F.col("url")).alias("host"),
         )
         .collect()
     )
+    assert len(rows) == len(samples)
     for r in rows:
-        assert r["valid"] == U.is_valid_url(r["url"])
-        assert r["norm"] == U.normalize_url(r["url"])
-        assert r["canon"] == U.canonicalize_url(r["url"])
+        # link leg: resolve -> validate -> normalize -> canonicalize
+        absolute = U.resolve_link(r["url"], base)
+        valid = absolute is not None and U.is_valid_url(absolute)
+        assert (r["link"]["absolute"] is not None) == valid
+        if valid:
+            assert r["link"]["absolute"] == absolute
+            norm = U.normalize_url(absolute)
+            assert r["link"]["norm"] == norm
+            assert r["link"]["canonical"] == (
+                U.canonicalize_url(norm) if norm is not None else None
+            )
+        else:
+            assert r["link"]["norm"] is None and r["link"]["canonical"] is None
+        assert tuple(r["link"]) == U.link_urls(r["url"], base)
+        # sitemap leg: normalize -> validate the normalized URL -> canonicalize
+        norm = U.normalize_url(r["url"])
+        valid = norm is not None and U.is_valid_url(norm)
+        assert r["sm"]["norm"] == (norm if valid else None)
+        assert r["sm"]["canonical"] == (U.canonicalize_url(norm) if valid else None)
+        assert tuple(r["sm"]) == U.sitemap_urls(r["url"])
         if U.is_valid_url(r["url"]):
             assert r["host"] == U.host_of(r["url"])
 

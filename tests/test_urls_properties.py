@@ -12,7 +12,9 @@ ALGEBRA the engine depends on:
 - equivalent spellings (www., default ports, fragments, tracking params,
   trailing slash) collapse to one canonical form;
 - none of the functions ever raises on arbitrary unicode garbage (the
-  frontier must never die on a hostile href).
+  frontier must never die on a hostile href);
+- the fused per-link chains (link_urls, sitemap_urls) the engine evaluates
+  in one UDF equal the step-by-step composition the oracle simulator runs.
 """
 
 from __future__ import annotations
@@ -24,8 +26,10 @@ from crawler_spark.functions.urls import (
     canonicalize_url,
     host_of,
     is_valid_url,
+    link_urls,
     normalize_url,
     resolve_link,
+    sitemap_urls,
 )
 
 # plausible-URL generator: scheme x host-ish x path-ish x query-ish
@@ -111,3 +115,58 @@ def test_resolve_link_absolute_when_resolves(base, href):
     out = resolve_link(href, base)
     if out is not None:
         assert out.startswith(("http://", "https://"))
+
+# link hrefs exercising every branch of the fused chain: skip schemes, bare
+# fragments, www./default-port spellings, tracking and pagination params,
+# blocked extensions, relative paths and None
+_href_prefix = st.sampled_from([
+    "", "http://", "https://", "http://www.", "HTTPS://WWW.", "mailto:",
+    "tel:", "javascript:", "data:", "#", "//", "/", "../", "ftp://", " ",
+])
+_port = st.sampled_from(["", ":80", ":443", ":8080"])
+_ext = st.sampled_from(["", "/", ".html", ".pdf", ".JPG", ".tar.gz", "//"])
+_params = st.lists(
+    st.sampled_from([
+        "utm_source=x", "gclid=1", "ref=tw", "page=007", "p=2", "offset=x",
+        "start=", "a=1", "b=2", "B=3", "sessionid=9",
+    ]),
+    max_size=4,
+)
+
+
+@st.composite
+def hrefs(draw):
+    if draw(st.integers(0, 15)) == 0:
+        return None
+    query = draw(_params)
+    return (
+        draw(_href_prefix)
+        + draw(st.sampled_from(["", "h.test", "Host.Test", "e.com"]))
+        + draw(_port)
+        + draw(_paths)
+        + draw(_ext)
+        + ("?" + "&".join(query) if query else "")
+        + draw(_frag)
+    )
+
+
+@given(hrefs(), st.one_of(st.none(), urls()))
+@settings(max_examples=500, deadline=None)
+def test_link_urls_is_the_composition(href, base):
+    absolute = resolve_link(href, base)
+    if absolute is None or not is_valid_url(absolute):
+        assert link_urls(href, base) == (None, None, None)
+        return
+    norm = normalize_url(absolute)
+    canonical = None if norm is None else canonicalize_url(norm)
+    assert link_urls(href, base) == (absolute, norm, canonical)
+
+
+@given(hrefs())
+@settings(max_examples=300, deadline=None)
+def test_sitemap_urls_is_the_composition(url):
+    norm = normalize_url(url) if url is not None else None
+    if norm is None or not is_valid_url(norm):
+        assert sitemap_urls(url) == (None, None)
+    else:
+        assert sitemap_urls(url) == (norm, canonicalize_url(norm))
