@@ -174,6 +174,9 @@ def structure_summary(spark: SparkSession, workdir: str) -> dict:
 def stage_timing_summary(workdir: str) -> dict:
     """A6 (database.py:436-451 analog): average per-round wall seconds per
     pipeline stage (schedule / fetch+extract / links / commit), plus totals.
+    ``links_sec`` covers link discovery, the URL UDF AND the url_seen dedup
+    anti-join (which first executes in the round's count tally);
+    ``commit_sec`` is the frontier/seen writes and the manifest swap.
     Driver-side over the manifest history — the metrics are already tiny."""
     hist = [h for h in SnapshotCatalog(workdir).metrics_history() if "wall_sec" in h]
     if not hist:

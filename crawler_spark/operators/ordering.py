@@ -122,7 +122,6 @@ def top_per_key(
     prune_col: str | None = None,
     prune_desc: bool = True,
     prune_max: int | None = None,
-    broadcast_cutoff: bool = True,
 ) -> DataFrame:
     """Keep the top-``limit_col`` rows per ``key`` in the given order.
 
@@ -182,16 +181,15 @@ def top_per_key(
             )
         )
         # broadcast the cutoff dim (one row per (key, salt)). The dim scales
-        # with hosts x salts: fine to ~10^7 keys, but at 10^8+ hosts set
-        # broadcast_cutoff=False — the shuffle-hash join then exchanges on
-        # exactly the (key, salt) partitioning the w1 window needs, so the
-        # Exchange is reused and the extra cost is one shuffle of the input
-        # it was about to shuffle anyway (measured: the narrow-window
-        # experiment in BENCH/BASELINE.md).
-        cut = F.broadcast(cutoff) if broadcast_cutoff else cutoff.hint("shuffle_hash")
+        # with hosts x salts: fine to ~10^7 keys. At 10^8+ hosts a
+        # shuffle-hash join (cutoff.hint("shuffle_hash")) is the alternative:
+        # it exchanges on exactly the (key, salt) partitioning the w1 window
+        # needs, so the Exchange is reused and the extra cost is one shuffle
+        # of the input it was about to shuffle anyway (measured: the
+        # narrow-window experiment in BENCH/BASELINE.md).
         salted = (
             salted.withColumn("_pv", pv)
-            .join(cut, [key, "_salt"])
+            .join(F.broadcast(cutoff), [key, "_salt"])
             .where(F.col("_pv") >= F.col("_cutoff"))
             .drop("_pv", "_cutoff")
         )

@@ -30,7 +30,7 @@ from crawler_spark.functions.urls import (
     sitemap_urls_udf,
     url_hash_col,
 )
-from crawler_spark.plans.round import FRONTIER_COLS, run_round
+from crawler_spark.plans.round import FRONTIER_COLS, _robots_dims, run_round
 from crawler_spark.sources.sitemap import sitemap_frontier_rows
 from crawler_spark.tables import SnapshotCatalog
 
@@ -174,6 +174,9 @@ def run_crawl(
     initial frontier at priority 3 / depth 1 — see :func:`init_state`.
     """
     cfg = cfg or CrawlConfig()
+    # once per crawl, before anything is written: a bad robots table fails
+    # here, not after init_state has committed a frontier
+    robots_dims = _robots_dims(robots_df, user_agent=cfg.user_agent)
     catalog = SnapshotCatalog(workdir)
     if catalog.current_manifest() is None:
         init_state(spark, catalog, seeds, cfg, sitemaps_df=sitemaps_df)
@@ -198,7 +201,7 @@ def run_crawl(
     rnd = catalog.current_round() + 1
     rounds, stopped = [], None
     while rnd < cfg.max_rounds:
-        m = run_round(spark, catalog, documents_df, robots_df, cfg, rnd, scheduled_total)
+        m = run_round(spark, catalog, documents_df, robots_dims, cfg, rnd, scheduled_total)
         if m.get("stopped"):
             stopped = m["stopped"]
             break

@@ -39,14 +39,17 @@ Scale notes (the parts that must survive 1000 executors / 10^10 URLs):
   stage costs about 0.2 s of worker CPU per task on PySpark 4.1 / Python
   3.11 whatever its row count (worker setup invalidates the import caches,
   and every zipimporter over pyspark.zip then re-reads the archive
-  directory), while the chain itself is ~40 us per link. The manifest's
-  ``links_sec`` therefore carries the URL work that ``commit_sec`` used to
-  carry (where ``fresh`` first ran normalize/canonicalize).
+  directory), while the chain itself is ~40 us per link;
+- no count actions: scheduled = min(admitted, remaining) off the seq pass,
+  and ONE groupBy(host_bucket, kind) collect yields completed / skipped /
+  fresh and the dirty buckets. ``fresh`` first executes in that tally, so
+  the manifest's ``links_sec`` covers the dedup anti-join too.
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -101,7 +104,6 @@ def _robots_dims(robots_df: DataFrame, user_agent: str = "*"):
     Disallow (e.g. 'Allow: /private/open' before 'Disallow: /private').
     """
     cols = robots_df.columns
-    orig = robots_df  # memo target: the caller passes the same object per round
     if "entry_id" in cols:
         from crawler_spark.sources.robots import rules_for_agent
 
@@ -119,11 +121,8 @@ def _robots_dims(robots_df: DataFrame, user_agent: str = "*"):
             .where((F.col("user_agent") != "*").cast("int") == F.col("_hs"))
             .drop("_hs")
         )
-    # memo is keyed by user_agent: the probe validates the AGENT-FILTERED
-    # view, and a later crawl reusing this DataFrame with a different agent
-    # can surface a multi-rule host the first agent's filter hid
-    _ok_agents = getattr(orig, "_rule_order_ok_agents", set())
-    if "rule_order" not in cols and user_agent not in _ok_agents:
+    # probe the AGENT-FILTERED view: one rule per host per agent is unambiguous
+    if "rule_order" not in cols:
         multi = (
             robots_df.groupBy("host").agg(F.count("*").alias("n"))
             .where(F.col("n") > 1).limit(1).count()
@@ -134,7 +133,6 @@ def _robots_dims(robots_df: DataFrame, user_agent: str = "*"):
                 "column; first-match semantics need the file order — add "
                 "rule_order (parse_robots_df emits it)"
             )
-        orig._rule_order_ok_agents = _ok_agents | {user_agent}
     order = (
         F.col("rule_order") if "rule_order" in cols else F.lit(0)
     ).alias("o")
@@ -153,24 +151,26 @@ def run_round(
     spark: SparkSession,
     catalog: SnapshotCatalog,
     documents_df: DataFrame,
-    robots_df: DataFrame,
+    robots_dims: tuple[DataFrame, DataFrame],
     cfg: CrawlConfig,
     rnd: int,
     scheduled_total: int,
 ) -> dict:
     """Execute round ``rnd``; returns metrics. Commits atomically on success.
 
+    ``robots_dims`` is the (rules, delays) pair from :func:`_robots_dims`.
     Returns {"stopped": reason} without committing when the crawl is done.
-    The round body registers every .persist() it takes in ``persisted`` and
-    a finally-block releases them: a mid-round exception (transient executor
-    loss, bad corpus schema) must not leak up to four cached plans for the
-    session's lifetime, nor leave stale cache entries that Spark's
-    CacheManager could substitute into a retried round's equal plans.
+    The round body registers every cache it takes (its .persist() calls and
+    the with_global_seq intermediate) in ``persisted`` and a finally-block
+    releases them: a mid-round exception (transient executor loss, bad
+    corpus schema) must not leak a cached plan for the session's lifetime,
+    nor leave stale cache entries that Spark's CacheManager could substitute
+    into a retried round's equal plans.
     """
     persisted: list[DataFrame] = []
     try:
         return _run_round_body(
-            spark, catalog, documents_df, robots_df, cfg, rnd,
+            spark, catalog, documents_df, robots_dims, cfg, rnd,
             scheduled_total, persisted,
         )
     finally:
@@ -182,7 +182,7 @@ def _run_round_body(
     spark: SparkSession,
     catalog: SnapshotCatalog,
     documents_df: DataFrame,
-    robots_df: DataFrame,
+    robots_dims: tuple[DataFrame, DataFrame],
     cfg: CrawlConfig,
     rnd: int,
     scheduled_total: int,
@@ -203,7 +203,7 @@ def _run_round_body(
     )
 
     # -- robots compliance (F7): broadcast dim join + first-match predicate --
-    rules_dim, delays = _robots_dims(robots_df, user_agent=cfg.user_agent)
+    rules_dim, delays = robots_dims
     path = F.regexp_replace(F.col("canonical"), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", "")
     # host-scaled dim: broadcast is right to ~10^7 hosts; a 10^8-host
     # frontier switches this to a bucketed/shuffle join keyed like url_seen
@@ -218,7 +218,7 @@ def _run_round_body(
         with_rules.where(denied)
         .select(*[c for c in FRONTIER_COLS if c != "status"])
         .withColumn("status", F.lit("skipped"))
-        .persist()  # three consumers (touched, frontier union, metrics count)
+        .persist()  # three consumers (touched, frontier union, tally)
     )
     persisted.append(skipped)
     allowed = with_rules.where(~denied).drop("rules")
@@ -251,6 +251,8 @@ def _run_round_body(
     # whole ranking pipeline twice. `seqd` keeps the original handle: the
     # cache-release marker does not survive .where()/.withColumn() rebinds.
     seqd = with_global_seq(admitted, order_exprs(), seq_col="seq")
+    if hasattr(seqd, "_global_seq_cache"):
+        persisted.append(seqd._global_seq_cache)
     admitted_cnt = seqd._global_seq_total
     if admitted_cnt == 0 and skipped.limit(1).count() == 0:
         # nothing admitted AND nothing denied this round; if nothing is
@@ -262,7 +264,6 @@ def _run_round_body(
         # unconditionally, oracle/simulator.py:369-374) — an early return
         # here would leave an all-denied frontier pending forever and burn
         # every round to max_rounds instead of draining to frontier_empty.
-        release_global_seq(seqd)
         any_pending = (
             frontier.where(F.col("status") == "pending").limit(1).count() > 0
         )
@@ -271,9 +272,10 @@ def _run_round_body(
         return {"stopped": None, "scheduled": 0, "advanced": True}
 
     scheduled = seqd
+    # seq numbers the admitted rows 0..admitted_cnt-1 without gaps: the page
+    # budget is a seq cutoff (no extra global sort) of known row count
+    scheduled_cnt = min(admitted_cnt, remaining)
     if admitted_cnt > remaining:
-        # seq is the total crawl order, so the page budget is a seq cutoff —
-        # no extra global sort
         scheduled = scheduled.where(F.col("seq") < remaining)
     # virtual-time politeness slots (J2/X2, queue.py:282-304 virtualized):
     # the k-th fetch of a host in this round happens at t0 + k*crawl_delay —
@@ -296,7 +298,6 @@ def _run_round_body(
     )
     release_global_seq(seqd)  # staged to parquet; drop the seq cache
     sched = spark.read.parquet(sched_path)  # lineage truncation + single eval
-    scheduled_cnt = sched.count()
     # A6 per-stage timings (database.py:436-451 analog): network timings do
     # not exist for a simulated fetch, so the honored contract is wall time
     # per pipeline stage per round (schedule / fetch+extract / links / commit)
@@ -497,6 +498,24 @@ def _run_round_body(
     )
     persisted.append(fresh)
 
+    # ONE action counts the round and finds its dirty buckets (module
+    # docstring); at most n_host_buckets x 4 rows reach the driver, never data
+    tally = (
+        fetched.select("host_bucket", F.when(F.col("success"), "completed").otherwise("failed"))
+        .union(skipped.select("host_bucket", F.lit("skipped")))
+        .union(fresh.select("host_bucket", F.lit("fresh")))
+        .toDF("host_bucket", "kind")
+        .groupBy("host_bucket", "kind")
+        .count()
+        .collect()
+    )
+    per_kind = Counter()
+    for _, kind, n in tally:
+        per_kind[kind] += n
+    completed_cnt, skipped_cnt, fresh_cnt = (
+        per_kind[k] for k in ("completed", "skipped", "fresh")
+    )
+    dirty = sorted({b for b, _, _ in tally})
     t_links_done = time.time()
 
     # -- outcome rows for the scheduled set (X4 retry / completed / failed) ---
@@ -522,16 +541,7 @@ def _run_round_body(
     # are rewritten; untouched buckets carry forward in their previous data
     # dirs via the manifest's bucket map (tables.stage_replace_buckets).
     # Commit cost tracks the touched-bucket row count, not frontier size —
-    # the r2 full-frontier rewrite per round is gone. The collect is bounded
-    # by n_host_buckets ints (4096 at 10^10 scale), not data.
-    dirty = sorted(
-        r["host_bucket"]
-        for r in sched.select("host_bucket")
-        .union(skipped.select("host_bucket"))
-        .union(fresh.select("host_bucket"))
-        .distinct()
-        .collect()
-    )
+    # the r2 full-frontier rewrite per round is gone.
     untouched_dirty = frontier.where(F.col("host_bucket").isin(dirty)).join(
         touched, "canonical", "left_anti"
     )
@@ -549,13 +559,10 @@ def _run_round_body(
         dirty_content.repartition(max(len(dirty), 1), "host_bucket"),
         dirty,
     )
-    completed_cnt = fetched.where("success").count()
-    fresh_cnt = fresh.count()
-    skipped_cnt = skipped.count()
     # the seen append MUST come after every other consumer of `fresh`:
     # fresh's plan anti-joins against the seen TABLE, whose dir this append
-    # mutates in place — a later re-evaluation (cache eviction; the frontier
-    # write and counts above) would see its own appended rows and anti-join
+    # mutates in place — a later re-evaluation (cache eviction; the tally
+    # and frontier write above) would see its own appended rows and anti-join
     # fresh to empty. Staged last, any re-evaluation reads pre-append state.
     commit.stage_seen_append(spark, fresh.select("url_hash", "canonical"))
     t_now = time.time()
@@ -579,7 +586,7 @@ def _run_round_body(
         commit_sec=round(t_now - t_links_done, 3),
     )
     commit.commit()
-    # the four persisted frames are released by run_round's finally block
+    # the persisted frames are released by run_round's finally block
     return {
         "stopped": None,
         "scheduled": scheduled_cnt,

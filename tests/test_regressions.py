@@ -1,6 +1,6 @@
 """Regression tests for defects found in the round-1 self-review:
 interrupted-commit resume, per-round cache leaks, string-keyed media decode,
-and the widened discovered_at bands."""
+and the widened discovered_at bands; plus the round's derived counters."""
 
 from __future__ import annotations
 
@@ -149,21 +149,128 @@ def test_dirty_bucket_commit_carries_forward(spark, tmp_path):
     assert [r["canonical"] for r in cat.read(spark, "frontier").collect()] == ["only"]
 
 
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_round_releases_caches(spark, small, tmp_path):
     """run_crawl must not leak persisted RDDs across rounds (seq cache,
     skipped set, fetched/fresh persists)."""
     docs_df, robots_df, seeds = small
-    base = {
-        rid for rid in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    base = _persistent_rdds(spark)
     run_crawl(
         spark, str(tmp_path / "crawl"), docs_df, robots_df, seeds,
         CrawlConfig(max_pages=30, max_rounds=4, n_host_buckets=4),
     )
-    after = {
-        rid for rid in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+    after = _persistent_rdds(spark)
     assert after <= base, f"leaked cached RDDs: {after - base}"
+
+
+def test_failed_round_releases_seq_cache(spark, small, tmp_path, monkeypatch):
+    """A round that raises after with_global_seq has cached the admitted
+    set (here: the crawl_order write fails) must release that cache too,
+    not only the frames it persisted itself."""
+    from crawler_spark.tables import RoundCommit
+
+    docs_df, robots_df, seeds = small
+    real = RoundCommit.stage_append
+
+    def failing(self, table, *a, **k):
+        if table == "crawl_order":
+            raise RuntimeError("injected crawl_order write failure")
+        return real(self, table, *a, **k)
+
+    base = _persistent_rdds(spark)
+    monkeypatch.setattr(RoundCommit, "stage_append", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_crawl(
+            spark, str(tmp_path / "crawl"), docs_df, robots_df, seeds,
+            CrawlConfig(max_pages=30, max_rounds=2, n_host_buckets=4),
+        )
+    after = _persistent_rdds(spark)
+    assert after <= base, f"leaked cached RDDs: {after - base}"
+
+
+@pytest.fixture(scope="module")
+def counted_crawl(spark, tmp_path_factory):
+    """A multi-round crawl with robots denials, fetch failures and
+    discovered links, run with every _robots_dims call recorded."""
+    import crawler_spark.plans.engine as engine
+    import crawler_spark.plans.round as round_mod
+
+    documents, seeds, robots = gen_corpus(
+        hosts=4, pages_per_host=8, seed=7, missing_frac=0.25
+    )
+    calls = []
+    real = round_mod._robots_dims
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    wd = str(tmp_path_factory.mktemp("counted") / "crawl")
+    with pytest.MonkeyPatch.context() as mp:
+        # both names: the crawl driver's import and the round module's own
+        mp.setattr(engine, "_robots_dims", counting, raising=False)
+        mp.setattr(round_mod, "_robots_dims", counting)
+        summary = run_crawl(
+            spark, wd, to_documents_df(spark, documents), to_robots_df(spark, robots),
+            seeds, CrawlConfig(max_pages=60, max_rounds=4, n_host_buckets=4),
+        )
+    return wd, summary, len(calls)
+
+
+def test_robots_dims_built_once_per_crawl(counted_crawl):
+    _, summary, calls = counted_crawl
+    assert len(summary["rounds"]) >= 3
+    assert calls == 1
+
+
+def test_manifest_counts_match_committed_tables(spark, counted_crawl):
+    """Each round's manifest counters equal independent counts over what the
+    round committed: crawl_order rows, successful pages, the skipped and
+    url_seen deltas between consecutive snapshots, and the dirty buckets
+    the frontier lineage records."""
+    wd, _, _ = counted_crawl
+    cat = SnapshotCatalog(wd)
+    order = cat.read(spark, "crawl_order")
+    pages = cat.read(spark, "pages")
+
+    def frontier_as_of(r):
+        f = cat.read_as_of(spark, "frontier", r)
+        return {row["canonical"]: (row["status"], row["host_bucket"]) for row in f.collect()}
+
+    def seen_as_of(r):
+        return {row["canonical"] for row in cat.read_as_of(spark, "url_seen", r).collect()}
+
+    rounds = sorted(
+        (m for _, m in cat.snapshot_chain() if m["round"] >= 0), key=lambda m: m["round"]
+    )
+    assert len(rounds) >= 3
+    totals = {"skipped": 0, "fresh": 0, "failed": 0}
+    for m in rounds:
+        r, got = m["round"], m["metrics"]
+        sched = order.where(F.col("round") == r)
+        done = pages.where((F.col("round") == r) & F.col("success")).count()
+        now, before = frontier_as_of(r), frontier_as_of(r - 1)
+        new_skipped = {
+            c for c, (st, _) in now.items() if st == "skipped"
+        } - {c for c, (st, _) in before.items() if st == "skipped"}
+        new_seen = seen_as_of(r) - seen_as_of(r - 1)
+        buckets = {row["host_bucket"] for row in sched.select("host_bucket").collect()} | {
+            now[c][1] for c in new_skipped | new_seen
+        }
+        (op,) = [o for o in m["lineage"]["frontier"] if o["op"] == "replace_buckets"]
+        assert got["scheduled"] == sched.count(), r
+        assert got["completed"] == done, r
+        assert got["skipped"] == len(new_skipped), r
+        assert got["fresh"] == len(new_seen), r
+        assert op["buckets"] == sorted(buckets), r
+        assert got["dirty_buckets"] == len(buckets), r
+        totals["skipped"] += got["skipped"]
+        totals["fresh"] += got["fresh"]
+        totals["failed"] += got["scheduled"] - got["completed"]
+    assert all(totals.values()), totals  # every counter path was exercised
 
 
 def test_decode_features_string_doc_keys(spark):
@@ -361,6 +468,8 @@ def test_rule_order_guard(spark, small, tmp_path):
             spark, str(tmp_path / "bad"), docs_df, bad_robots, seeds,
             CrawlConfig(max_pages=10, max_rounds=1, n_host_buckets=4),
         )
+    # rejected before init_state: nothing was committed
+    assert SnapshotCatalog(str(tmp_path / "bad")).current_manifest() is None
     # single rule per host without rule_order stays fine (unambiguous)
     ok_robots = spark.createDataFrame(
         [("host0.test", "*", "/private", False, None)],
