@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawler_spark.operators.dedup import blocked_pairs
+
 # floor(x * 2^20) + 2^21: scale is a power of two so x*scale is an EXACT
 # double product for every float x (no rounding before the floor), and the
 # offset 2*scale keeps quantized components nonnegative for |x| <= 2.
@@ -165,17 +167,10 @@ def semantic_neardup(
     assigned = fit.join(
         vectors.select(F.col(id_col).alias("vec_id"), vec_col), "vec_id"
     )
-    a = assigned.select(
-        F.col("vec_id").alias("vec_a"), F.col(vec_col).alias("_va"), "cluster"
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("vec_b"), F.col(vec_col).alias("_vb"), "cluster"
-    )
     return (
-        a.join(b, "cluster")
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .where(cosine(F.col("_va"), F.col("_vb")) >= threshold)
-        .select("vec_a", "vec_b")
+        blocked_pairs(assigned, "vec_id", "cluster", carry=(vec_col,))
+        .where(cosine(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")) >= threshold)
+        .select(F.col("vec_id_a").alias("vec_a"), F.col("vec_id_b").alias("vec_b"))
     )
 
 
@@ -210,21 +205,13 @@ def semdedup_keepset(
     assigned = fit.join(
         vectors.select(F.col(id_col).alias("vec_id"), vec_col), "vec_id"
     ).localCheckpoint(eager=False)
-    a = assigned.select(
-        F.col("vec_id").alias("_ida"), F.col(vec_col).alias("_va"), "cluster"
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("_idb"), F.col(vec_col).alias("_vb"), "cluster"
-    )
+    # the higher id of a near pair is the one a lower-id member covers
     dropped = (
-        a.join(b, "cluster")
-        .where(F.col("_idb") < F.col("_ida"))
-        .where(cosine(F.col("_va"), F.col("_vb")) >= threshold)
-        .select(F.col("_ida").alias("vec_id"))
+        blocked_pairs(assigned, "vec_id", "cluster", carry=(vec_col,))
+        .where(cosine(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")) >= threshold)
+        .select(F.col("vec_id_b").alias("vec_id"))
         .distinct()
     )
-    return assigned.select("vec_id", "cluster").join(
-        dropped.withColumn("_d", F.lit(True)), "vec_id", "left"
-    ).select(
-        "vec_id", "cluster", F.coalesce(F.col("_d"), F.lit(False)).alias("dropped")
-    ).select("vec_id", "cluster", (~F.col("dropped")).alias("keep"))
+    return assigned.join(dropped.withColumn("_d", F.lit(True)), "vec_id", "left").select(
+        "vec_id", "cluster", F.col("_d").isNull().alias("keep")
+    )

@@ -19,9 +19,18 @@ Scale design (100 TB / 10^10 docs):
   equality-joins on chunk values (again: no cross join);
 - n-gram Jaccard without LSH (``ngram_jaccard_pairs``) joins on shared
   shingles — exact but quadratic in per-shingle document frequency; it is the
-  small-scale oracle twin, with a document-frequency cap to keep the
-  hot-shingle blowup bounded (drop shingles appearing in > df_cap docs:
-  standard "stop-shingle" pruning).
+  small-scale oracle twin.
+
+One blocked-pair kernel: every family that blocks on a key (LSH band,
+shingle, SimHash chunk, fingerprint, IVF/k-means cell, SRP bucket, citing
+page) forms candidates with :func:`blocked_pairs`, one equality self-join
+with ``{id}_a < {id}_b``. A block of b rows expands to b(b-1)/2 pairs, so
+the kernel owns the one hot-block policy: ``max_block`` drops every key
+held by more than that many rows before the join (:func:`drop_hot_blocks`,
+"stop-key" pruning: a boilerplate shingle or a links-to-everything hub
+carries no pairwise signal). The count is a window on the join key, whose
+hash partitioning the sort-merge join reuses, so the cap adds no shuffle.
+Candidates are verified by one shared-shingle count, :func:`_shared_counts`.
 """
 
 from __future__ import annotations
@@ -107,29 +116,73 @@ def minhash_signature(shingles: DataFrame, k: int = MINHASH_K) -> DataFrame:
     )
 
 
+def drop_hot_blocks(rows: DataFrame, key: str | list[str], max_block: int) -> DataFrame:
+    """``rows`` without the keys held by more than ``max_block`` rows (the
+    stop-key prune; see the module docstring)."""
+    keys = [key] if isinstance(key, str) else list(key)
+    return (
+        rows.withColumn("_bsz", F.count("*").over(Window.partitionBy(*keys)))
+        .where(F.col("_bsz") <= max_block)
+        .drop("_bsz")
+    )
+
+
+def blocked_pairs(
+    rows: DataFrame,
+    id_col: str,
+    key: str | list[str],
+    max_block: int | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs sharing a block key: the one blocked self-join.
+
+    Returns one row per (pair, shared key value) with ``{id_col}_a <
+    {id_col}_b``, columns in this order: the key column(s), ``{id_col}_a``
+    and ``{c}_a`` for each ``carry`` column, then the same for side b.
+    ``max_block`` drops hot keys first (:func:`drop_hot_blocks`).
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    if max_block is not None:
+        rows = drop_hot_blocks(rows, keys, max_block)
+    rows = rows.select(*keys, id_col, *carry)
+    a, b = rows.alias("a"), rows.alias("b")
+    sides = [F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in (id_col, *carry)]
+    # the id order is a filter, not part of the join condition: a caller's
+    # verify filter (a cosine, say) pushed into the join is appended AFTER
+    # it, so the cheap comparison short-circuits it on half the matches
+    return (
+        a.join(b, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(*[F.col(f"a.{k}").alias(k) for k in keys], *sides)
+    )
+
+
+def _band_rows(sig: DataFrame, k: int, band_size: int) -> DataFrame:
+    """(doc, band) LSH band-key rows for a signature frame: ``k //
+    band_size`` bands of ``band_size`` rows, keyed on the band signature
+    string (shared by the batch and incremental pairers)."""
+    bands = []
+    for b in range(k // band_size):
+        cols = [F.col(f"mh{b * band_size + j}") for j in range(band_size)]
+        bands.append(F.concat_ws(":", F.lit(str(b)), *[c.cast("string") for c in cols]))
+    return sig.select("doc", F.explode(F.array(*bands)).alias("band"))
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, k: int = MINHASH_K, band_size: int = LSH_BAND_SIZE
 ) -> DataFrame:
-    """Candidate pairs (a < b) sharing at least one LSH band signature.
+    """Candidate pairs (doc_a < doc_b) sharing at least one LSH band signature.
 
-    Bands of ``band_size`` rows; the shuffle key is the band signature string
-    so each reduce group is one candidate bucket. Buckets are deduped into
-    ordered pairs. At 10^10 docs a runaway bucket (pathological corpus) is
-    bounded by AQE skew split; the per-bucket pair expansion is the standard
-    LSH cost model. (k // band_size bands, r = band_size: the s-curve
-    threshold is (1/b)^(1/r) — size the bands to the target similarity.)
+    Each band-signature block is one candidate bucket; buckets are deduped
+    into ordered pairs. At 10^10 docs a runaway bucket (pathological corpus)
+    is bounded by AQE skew split; the per-bucket pair expansion is the
+    standard LSH cost model. (k // band_size bands, r = band_size: the
+    s-curve threshold is (1/b)^(1/r) — size the bands to the target
+    similarity.)
     """
-    n_bands = k // band_size
-    bands = []
-    for b in range(n_bands):
-        cols = [F.col(f"mh{b * band_size + j}") for j in range(band_size)]
-        bands.append(F.concat_ws(":", F.lit(str(b)), *[c.cast("string") for c in cols]))
-    keyed = signatures.select("doc", F.explode(F.array(*bands)).alias("band"))
-    a = keyed.alias("a")
-    b = keyed.alias("b")
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        blocked_pairs(_band_rows(signatures, k, band_size), "doc", "band")
+        .select("doc_a", "doc_b")
         .distinct()
     )
 
@@ -165,45 +218,50 @@ def minhash_lsh_dedup(
         else doc_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
     )
     sig = minhash_signature(sh, k)
-    cand = lsh_candidate_pairs(sig, k, band_size)
-    j = _pair_jaccard(cand, sh)
-    return (
-        j.where(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", F.round(F.col("jaccard") * 100).cast("int").alias("jaccard_pct"))
-    )
+    return _pair_jaccard(lsh_candidate_pairs(sig, k, band_size), sh, threshold)
 
 
-def _pair_jaccard(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard) — intersection via double join on shingle hash.
+def _shared_counts(cand: DataFrame, shingles: DataFrame) -> DataFrame:
+    """``cand``'s columns plus ``inter`` = |S(doc_a) n S(doc_b)|: the one
+    shared-shingle verify, a double join on the shingle hash.
 
     The shingle set is first semi-joined down to docs that appear in some
     candidate pair, so the intersection joins shuffle candidate docs'
-    shingles only (AQE broadcasts the doc list when candidates are sparse
-    — the common dedup case); sizes still come from the FULL per-doc sets,
-    so the Jaccard stays exact."""
-    sizes = shingles.groupBy("doc").agg(F.count("*").alias("sz"))
-    # pairs' plan is the caller's whole candidate pipeline and fans out to
-    # 3 consumers here (cand_docs x2, inter join); pin the tiny frame
-    pairs = pairs.localCheckpoint(eager=False)
+    shingles only (AQE broadcasts the doc list when candidates are sparse —
+    the common dedup case). Pairs sharing no shingle get no row."""
+    # cand is tiny (surviving candidate pairs) but its plan embeds the
+    # caller's whole candidate pipeline and fans out to 3 consumers here
+    # (cand_docs x2, inter join): pin it or candidate generation recomputes
+    cand = cand.localCheckpoint(eager=False)
     cand_docs = (
-        pairs.select(F.col("doc_a").alias("doc"))
-        .union(pairs.select(F.col("doc_b").alias("doc")))
+        cand.select(F.col("doc_a").alias("doc"))
+        .union(cand.select(F.col("doc_b").alias("doc")))
         .distinct()
     )
     shc = shingles.join(cand_docs, "doc")
-    sa = shc.select(F.col("doc").alias("doc_a"), F.col("sh"))
-    sb = shc.select(F.col("doc").alias("doc_b"), F.col("sh"))
-    inter = (
-        pairs.join(sa, "doc_a").join(sb, ["doc_b", "sh"]).groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter"))
-    )
+    sa = shc.select(F.col("doc").alias("doc_a"), "sh")
+    sb = shc.select(F.col("doc").alias("doc_b"), "sh")
     return (
-        inter.join(sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
+        cand.join(sa, "doc_a")
+        .join(sb, ["doc_b", "sh"])
+        .groupBy(*cand.columns)
+        .agg(F.count("*").alias("inter"))
+    )
+
+
+def _pair_jaccard(pairs: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard_pct) for candidate ``pairs`` with Jaccard >=
+    ``threshold``; sizes come from the FULL per-doc sets, so the Jaccard
+    stays exact. jaccard_pct is an integer percentage, so the value-hash
+    comparison with the oracle is float-safe."""
+    sizes = shingles.groupBy("doc").agg(F.count("*").alias("sz"))
+    jac = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+    return (
+        _shared_counts(pairs, shingles)
+        .join(sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
         .join(sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))).alias("jaccard"),
-        )
+        .where(jac >= F.lit(threshold))
+        .select("doc_a", "doc_b", F.round(jac * 100).cast("int").alias("jaccard_pct"))
     )
 
 
@@ -217,24 +275,38 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard over docs sharing >= 1 shingle.
 
-    ``df_cap`` drops stop-shingles (document frequency above the cap) before
-    the pair expansion — at web scale the expansion is quadratic in df, so the
-    cap is what keeps this runnable; LSH (minhash_lsh_dedup) is the true scale
-    path.
+    ``df_cap`` is the kernel's ``max_block``: stop-shingles held by more
+    than ``df_cap`` docs are dropped before the pair expansion, which is
+    quadratic in document frequency; LSH (minhash_lsh_dedup) is the true
+    scale path.
     """
     sh = doc_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
-    w = Window.partitionBy("sh")
-    pruned = sh.withColumn("_df", F.count("*").over(w)).where(F.col("_df") <= df_cap).drop("_df")
     pairs = (
-        pruned.alias("a")
-        .join(pruned.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        blocked_pairs(sh, "doc", "sh", max_block=df_cap)
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    j = _pair_jaccard(pairs, sh)  # sizes from the unpruned sets: exact Jaccard
+    return _pair_jaccard(pairs, sh, threshold)  # sizes from the unpruned sets
+
+
+def _rarest_first(sh: DataFrame, th_num: int, th_den: int) -> DataFrame:
+    """(doc, sz, _ord, _pref): each doc's shingles in ascending global
+    document frequency, (df, sh) total order, and the prefix of length
+    ``sz - ceil(th_num/th_den * sz) + 1`` that the prefix filters probe —
+    one hash aggregate per doc, which sorts each doc's own bounded array."""
+    dfc = sh.groupBy("sh").agg(F.count("*").alias("_df"))
     return (
-        j.where(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", F.round(F.col("jaccard") * 100).cast("int").alias("jaccard_pct"))
+        sh.join(dfc, "sh")
+        .groupBy("doc")
+        .agg(F.sort_array(F.collect_list(F.struct("_df", "sh"))).alias("_arr"))
+        .select(
+            "doc",
+            F.size("_arr").alias("sz"),
+            F.expr("transform(_arr, s -> s.sh)").alias("_ord"),
+        )
+        .withColumn(
+            "_pref", F.expr(f"slice(_ord, 1, sz - (({th_num} * sz + {th_den} - 1) div {th_den}) + 1)")
+        )
     )
 
 
@@ -258,8 +330,8 @@ def prefix_jaccard_pairs(
     doc miss the other, the overlap is < t of the union). So candidates
     come from an equality join on PREFIX shingles only — hot shingles land
     in the long tail of every prefix order and never join, which is what
-    bounds the pair expansion (``ngram_jaccard_pairs``'s df_cap achieves
-    this heuristically; the prefix filter achieves it *provably*). Exact
+    bounds the pair expansion (the kernel's ``max_block`` cap achieves this
+    heuristically; the prefix filter achieves it *provably*). Exact
     Jaccard verification on the full sets then keeps pairs with
     inter/union >= t, all in integer arithmetic.
 
@@ -287,42 +359,26 @@ def prefix_jaccard_pairs(
     block lands in a single join task and degenerates the pair-distinct's
     partial aggregate (measured at sf0.1: 21.1M raw pair rows, a 240 MB
     shuffle, one 2.1 GB-peak aggregate task); the filters cut the pair
-    stream before it is ever shuffled. The shingle set is then semi-joined
-    down to candidate docs, so the intersection-count joins shuffle only
-    candidate docs' shingles, not the corpus (AQE broadcasts the doc list
-    when candidates are sparse, the common dedup case).
+    stream before it is ever shuffled. The verify is :func:`_shared_counts`.
     """
     sh = (
         shingles
         if shingles is not None
         else doc_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
     )
-    dfc = sh.groupBy("sh").agg(F.count("*").alias("_df"))
-    # ONE hash aggregate per doc yields both the (df, sh)-ordered prefix and
-    # the set size: the previous shape paid a row_number window (a full SORT
-    # of the joined shingle set by (doc, df, sh)) plus a separate
-    # groupBy(doc) pass for sizes — per-doc arrays are bounded by doc
-    # length, so sorting them inside the aggregate is the cheap side
     per_doc = (
-        sh.join(dfc, "sh")
-        .groupBy("doc")
-        .agg(F.sort_array(F.collect_list(F.struct("_df", "sh"))).alias("_arr"))
-        .select(
-            "doc",
-            F.size("_arr").alias("sz"),
-            F.expr(
-                f"transform(slice(_arr, 1, size(_arr) - "
-                f"(({th_num} * size(_arr) + {th_den} - 1) div {th_den}) + 1), "
-                "s -> s.sh)"
-            ).alias("_pref"),
-        )
-        .localCheckpoint(eager=False)  # feeds prefix (joined twice) + sizes
+        _rarest_first(sh, th_num, th_den)
+        .select("doc", "sz", "_pref")
+        .localCheckpoint(eager=False)  # both sides of the prefix join
     )
     prefix = per_doc.select(
         "doc", "sz", F.posexplode("_pref").alias("pos", "sh")
     )
     sz_a, sz_b = F.col("a.sz"), F.col("b.sz")
     ubound = F.least(sz_a - F.col("a.pos"), sz_b - F.col("b.pos"))
+    # not blocked_pairs: the size and positional filters must run INSIDE
+    # the join condition, per matched row, before any pair row is emitted
+    # (see docstring) — a prefix shingle's block is never capped, it is cut
     cand = (
         prefix.alias("a")
         .join(
@@ -342,25 +398,8 @@ def prefix_jaccard_pairs(
             sz_b.alias("sz_b"),
         )
         .distinct()
-        # cand is tiny (surviving candidate pairs) but its plan embeds the
-        # whole prefix-join pipeline; it fans out to 3 consumers below, so
-        # pin it or the candidate generation recomputes per consumer
-        .localCheckpoint(eager=False)
     )
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc"))
-        .union(cand.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
-    shc = sh.join(cand_docs, "doc")
-    sa = shc.select(F.col("doc").alias("doc_a"), "sh")
-    sb = shc.select(F.col("doc").alias("doc_b"), "sh")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    inter = _shared_counts(cand, sh)
     return (
         inter.withColumn("sz_union", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
         .where(F.col("inter") * th_den >= F.col("sz_union") * th_num)
@@ -446,25 +485,13 @@ def simhash_pairs(
         ]
     )
     keyed = sim.select("doc", "simhash", F.posexplode(chunks).alias("ci", "cv"))
-    a = keyed.alias("a")
-    b = keyed.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
+        blocked_pairs(keyed, "doc", ["ci", "cv"], carry=("simhash",))
+        .select("doc_a", "doc_b", "simhash_a", "simhash_b")
         .distinct()
     )
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        cand.withColumn("hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
@@ -882,26 +909,16 @@ def winnow_pairs(
     """(doc_a, doc_b, n_shared): pairs sharing >= min_shared winnowed
     fingerprints — contiguous-overlap near-dup candidates.
 
-    Same scale discipline as ngram_jaccard_pairs: stop-fingerprints with
-    document frequency above ``df_cap`` (site chrome, boilerplate spans)
-    are pruned before the pair expansion, which is quadratic in df.
+    ``df_cap`` is the kernel's ``max_block``: stop-fingerprints (site
+    chrome, boilerplate spans) held by more than ``df_cap`` docs are
+    pruned before the pair expansion.
     """
-    # both sides of the self-join (and the df-cap window) consume the
+    # both sides of the self-join (and the cap window) consume the
     # fingerprint stream; checkpoint so the 10M-md5 gram scan runs once
     fps = winnow_fingerprints(df, id_col, text_col, k, w).localCheckpoint(eager=False)
-    win = Window.partitionBy("fp")
-    pruned = (
-        fps.withColumn("_df", F.count("*").over(win))
-        .where(F.col("_df") <= df_cap)
-        .drop("_df")
-    )
     return (
-        pruned.alias("a")
-        .join(
-            pruned.alias("b"),
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        blocked_pairs(fps, "doc", "fp", max_block=df_cap)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
@@ -987,18 +1004,6 @@ def dup_span_removal(
     )
 
 
-def _band_rows(sig: DataFrame, k: int, band_size: int) -> DataFrame:
-    """(doc, band) LSH band-key rows for a signature frame (shared by the
-    batch and incremental pairers)."""
-    bands = []
-    for b in range(k // band_size):
-        cols = [F.col(f"mh{b * band_size + j}") for j in range(band_size)]
-        bands.append(
-            F.concat_ws(":", F.lit(str(b)), *[c.cast("string") for c in cols])
-        )
-    return sig.select("doc", F.explode(F.array(*bands)).alias("band"))
-
-
 def incremental_lsh_keepset(
     new_df: DataFrame,
     old_df: DataFrame,
@@ -1032,6 +1037,9 @@ def incremental_lsh_keepset(
     sh_old = doc_shingles(old_df, id_col, text_col, n).localCheckpoint(eager=False)
     nb = _band_rows(minhash_signature(sh_new, k), k, band_size)
     ob = _band_rows(minhash_signature(sh_old, k), k, band_size)
+    # not blocked_pairs: the join is asymmetric — new (left) against old +
+    # lower-id new (right); the symmetric kernel over old + new would form
+    # every old x old pair, the cost this operator exists to avoid
     rhs = ob.withColumn("side", F.lit("old")).unionByName(
         nb.withColumn("side", F.lit("new"))
     )
@@ -1042,11 +1050,7 @@ def incremental_lsh_keepset(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    ver = (
-        _pair_jaccard(cand, sh_new.unionByName(sh_old))
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b")
-    )
+    ver = _pair_jaccard(cand, sh_new.unionByName(sh_old), threshold).select("doc_a", "doc_b")
     old_ids = old_df.select(F.col(id_col).alias("doc_b"), F.lit(1).alias("_is_old"))
     agg = (
         ver.join(old_ids, "doc_b", "left")
@@ -1137,12 +1141,11 @@ def source_overlap(
     Scale: shingles reduce to DISTINCT (group, sh) FIRST — the join volume
     is keyed by source count, not document count. Shingles present in more
     than ``group_cap`` distinct groups are dropped before the pair join
-    (stop-shingle pruning, same knob family as ngram_jaccard_pairs'
-    df_cap): a boilerplate shingle shared by 10^5 hosts would otherwise
-    contribute ~10^10 pairs; capped, each surviving shingle yields at most
-    C(group_cap, 2) pairs. Per-group sizes are computed on the CAPPED
-    shingle set so containment stays an exact function of the joined data
-    on both engines.
+    (:func:`drop_hot_blocks`): a boilerplate shingle shared by 10^5 hosts
+    would otherwise contribute ~10^10 pairs; capped, each surviving shingle
+    yields at most C(group_cap, 2) pairs. Per-group sizes are computed on
+    the CAPPED shingle set so containment stays an exact function of the
+    joined data on both engines.
     """
     sh = (
         doc_shingles(df, id_col, text_col, n, wide=True)
@@ -1155,17 +1158,13 @@ def source_overlap(
         .select("grp", "sh")
         .distinct()
     )
-    keep = sh.groupBy("sh").agg(F.count("*").alias("_ng")).where(
-        F.col("_ng") <= group_cap
-    )
-    sh = sh.join(keep.select("sh"), "sh")
+    # capped once, before the sizes: both the pairs and the containment
+    # denominators see the same stop-shingle-free set
+    sh = drop_hot_blocks(sh, "sh", group_cap)
     sizes = sh.groupBy("grp").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("grp").alias("source_a"), "sh")
-    b = sh.select(F.col("grp").alias("source_b"), "sh")
     pairs = (
-        a.join(b, "sh")
-        .where(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
+        blocked_pairs(sh, "grp", "sh")
+        .groupBy(F.col("grp_a").alias("source_a"), F.col("grp_b").alias("source_b"))
         .agg(F.count("*").alias("n_shared"))
     )
     sa = sizes.select(F.col("grp").alias("source_a"), F.col("sz").alias("_sza"))
@@ -1283,25 +1282,8 @@ def containment_pairs(
     row per ordered pair, containment_bp = inter*10000 div sz_a.
     """
     sh = doc_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
-    dfc = sh.groupBy("sh").agg(F.count("*").alias("_df"))
-    # same single-hash-aggregate prefix construction as prefix_jaccard_pairs:
-    # one groupBy(doc) yields the (df, sh)-ordered prefix AND the set size,
-    # replacing the row_number window sort + a second sizes pass
-    per_doc = (
-        sh.join(dfc, "sh")
-        .groupBy("doc")
-        .agg(F.sort_array(F.collect_list(F.struct("_df", "sh"))).alias("_arr"))
-        .select(
-            "doc",
-            F.size("_arr").alias("sz"),
-            F.expr("transform(_arr, s -> s.sh)").alias("_ord"),
-            F.expr(
-                f"slice(transform(_arr, s -> s.sh), 1, size(_arr) - "
-                f"(({th_num} * size(_arr) + {th_den} - 1) div {th_den}) + 1)"
-            ).alias("_pref"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    # both sides of the candidate join read it
+    per_doc = _rarest_first(sh, th_num, th_den).localCheckpoint(eager=False)
     prefix = per_doc.select(
         "doc", "sz", F.posexplode("_pref").alias("pos", "sh")
     )
@@ -1311,6 +1293,8 @@ def containment_pairs(
         "doc", "sz", F.posexplode("_ord").alias("pos", "sh")
     )
     sz_a, sz_b = F.col("a.sz"), F.col("b.sz")
+    # not blocked_pairs: the pairs are ORDERED (prefix of a against all of
+    # b, a != b) and the positional bounds run inside the join condition
     cand = (
         prefix.alias("a")
         .join(
@@ -1329,23 +1313,8 @@ def containment_pairs(
             sz_b.alias("sz_b"),
         )
         .distinct()
-        # fans out to 3 consumers (cand_docs x2, inter); pin the tiny frame
-        .localCheckpoint(eager=False)
     )
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc"))
-        .union(cand.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
-    shc = sh.join(cand_docs, "doc")
-    sa = shc.select(F.col("doc").alias("doc_a"), "sh")
-    sb = shc.select(F.col("doc").alias("doc_b"), "sh")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    inter = _shared_counts(cand, sh)
     return (
         inter.where(F.col("inter") * th_den >= F.col("sz_a") * th_num)
         .select(

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawler_spark.operators.dedup import blocked_pairs
+
 
 def dot(a: Column, b: Column) -> Column:
     """Double-precision dot product of two float-array columns (JVM-side)."""
@@ -135,10 +137,12 @@ def embedding_neardup(
         assigned = ivf_assign(vectors, n_centroids, id_col, vec_col).localCheckpoint(
             eager=False
         )
-        a = assigned.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"), "cell")
-        b = assigned.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"), "cell")
-        pairs = a.join(b, "cell").where(F.col("vec_a") < F.col("vec_b"))
+        pairs = blocked_pairs(assigned, id_col, "cell", carry=(vec_col,)).toDF(
+            "cell", "vec_a", "_va", "vec_b", "_vb"
+        )
     else:
+        # not blocked_pairs: the exact mode is the all-pairs baseline the
+        # blocked paths are checked against, so it has no block key
         a = vectors.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"))
         b = vectors.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"))
         pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -222,12 +226,9 @@ def srp_neardup(
     keyed = vectors.select(
         F.col(id_col).alias("vid"), F.explode(guarded).alias("bucket")
     ).localCheckpoint(eager=False)
-    a = keyed.select(F.col("vid").alias("vec_a"), "bucket")
-    b = keyed.select(F.col("vid").alias("vec_b"), "bucket")
     cand = (
-        a.join(b, "bucket")
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
+        blocked_pairs(keyed, "vid", "bucket")
+        .select(F.col("vid_a").alias("vec_a"), F.col("vid_b").alias("vec_b"))
         .distinct()
     )
     va = vectors.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"))

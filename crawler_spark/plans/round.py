@@ -243,7 +243,7 @@ def _run_round_body(
         salt_buckets=cfg.salt_buckets,
         prune_col="priority",
         prune_max=remaining,
-    ).drop("budget", "rn")
+    ).drop("budget")
 
     # with_global_seq's partition-offset pass doubles as the admitted count
     # (and its cache backs the staging write), so the politeness window stack
@@ -278,18 +278,19 @@ def _run_round_body(
     if admitted_cnt > remaining:
         scheduled = scheduled.where(F.col("seq") < remaining)
     # virtual-time politeness slots (J2/X2, queue.py:282-304 virtualized):
-    # the k-th fetch of a host in this round happens at t0 + k*crawl_delay —
-    # the admitted set is budget-bounded, so this window is tiny
-    host_slot = Window.partitionBy("host").orderBy("seq")
+    # the k-th fetch of a host in this round happens at t0 + k*crawl_delay.
+    # k = rn - 1: top_per_key's rn is the per-host rank in order_exprs
+    # (canonical breaks ties), seq follows the same order within a host, and
+    # the seq cutoff above drops only a tail of each host's rows — so rn is
+    # exactly the host's row number by seq, with no second window
     scheduled = (
         scheduled.withColumn("round", F.lit(rnd))
         .withColumn(
             "fetch_ts",
             F.lit(t0)
-            + (F.row_number().over(host_slot) - 1)
-            * F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_delay)),
+            + (F.col("rn") - 1) * F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_delay)),
         )
-        .drop("crawl_delay")
+        .drop("crawl_delay", "rn")
     )
 
     commit = catalog.begin(rnd)

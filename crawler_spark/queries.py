@@ -2525,23 +2525,16 @@ def q_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-citation similarity (Small 1973): two pages are related when many
     pages link to BOTH — the link-graph relatedness signal that needs no
     text, used to find substitutable sources and citation clusters. Pairs
-    come from the self-join of the (distinct) edge list on its source;
-    sources with out-degree above {cap} are dropped first — the standard
-    super-spreader guard, because a single 10^5-outlink hub contributes
-    O(outdeg^2) pairs and would dominate both the shuffle and the
-    semantics (a links-to-everything page carries no relatedness signal;
-    same degree-cap reasoning as textstats df_cap). Top-20 pairs."""
+    come from the blocked self-join of the (distinct) edge list on its
+    source; sources with out-degree above _COCITE_MAX_OUT are dropped
+    first (the kernel's max_block) — the standard super-spreader guard,
+    because a single 10^5-outlink hub contributes O(outdeg^2) pairs and
+    would dominate both the shuffle and the semantics (a links-to-everything
+    page carries no relatedness signal). Top-20 pairs."""
     edges = _synth_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    kept = edges.join(
-        deg.where(F.col("outdeg") <= _COCITE_MAX_OUT).select("src"), "src"
-    )
-    e1 = kept.select("src", F.col("dst").alias("doc_a"))
-    e2 = kept.select("src", F.col("dst").alias("doc_b"))
     return (
-        e1.join(e2, "src")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        dedup.blocked_pairs(edges, "dst", "src", max_block=_COCITE_MAX_OUT)
+        .groupBy(F.col("dst_a").alias("doc_a"), F.col("dst_b").alias("doc_b"))
         .agg(F.count("*").alias("n_cociting"))
         .orderBy(F.desc("n_cociting"), F.asc("doc_a"), F.asc("doc_b"))
         .limit(20)

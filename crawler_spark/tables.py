@@ -246,18 +246,10 @@ class SnapshotCatalog:
         the real commit at the same round). Pre-chain manifests (no
         ``parent`` key) fall back to the legacy round<=current scan.
         """
-        name = self._current_name()
-        chain, seen = [], set()
-        while name and name not in seen:
-            seen.add(name)
-            m = self._load_manifest(name)
-            if m is None:
-                break
-            if "parent" not in m:  # legacy manifest: finish with the old scan
-                return self._metrics_history_legacy()
-            chain.append({"round": m["round"], **m.get("metrics", {})})
-            name = m["parent"]
-        return list(reversed(chain))
+        chain = self.snapshot_chain()
+        if any("parent" not in m for _, m in chain):
+            return self._metrics_history_legacy()
+        return [{"round": m["round"], **m.get("metrics", {})} for _, m in reversed(chain)]
 
     def _metrics_history_legacy(self) -> list[dict]:
         current = self.current_round()
@@ -552,35 +544,20 @@ class SnapshotCatalog:
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(path + ".tmp", path)
-        ref_dirs: set[str] = set()
+        ref_dirs = _referenced_dirs(m for _, m in kept)
         seen_files: dict[str, set[str]] = {}
         for _, m in kept:
-            for dirs in m.get("tables", {}).values():
-                ref_dirs.update(dirs)
             if "seen" in m:
-                ref_dirs.add(m["seen"]["dir"])
                 seen_files.setdefault(m["seen"]["dir"], set()).update(
                     m["seen"]["files"]
                 )
-            if "frontier_buckets" in m:
-                fb = m["frontier_buckets"]
-                ref_dirs.add(fb["default"])
-                ref_dirs.update(fb["map"].values())
         n_manifests = 0
         cdir = os.path.join(self.root, "_commits")
         for name in os.listdir(cdir):
             if name.endswith(".json") and name not in kept_names:
                 os.remove(os.path.join(cdir, name))
                 n_manifests += 1
-        n_dirs = 0
-        for table in os.listdir(self.root):
-            tdir = os.path.join(self.root, table)
-            if table == "_commits" or not os.path.isdir(tdir):
-                continue
-            for d in os.listdir(tdir):
-                if f"{table}/{d}" not in ref_dirs:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-                    n_dirs += 1
+        n_dirs = self._sweep_dirs(ref_dirs)
         n_seen = 0
         for rel, files in seen_files.items():
             d = os.path.join(self.root, rel)
@@ -599,26 +576,36 @@ class SnapshotCatalog:
         reclaim superseded generations, expire_snapshots() — which also
         removes their manifests and keeps the time-travel contract honest.
         """
-        referenced = set()
-        for _, m in self.snapshot_chain():
-            for dirs in m.get("tables", {}).values():
-                referenced.update(dirs)
-            if "seen" in m:
-                referenced.add(m["seen"]["dir"])
-            if "frontier_buckets" in m:
-                referenced.add(m["frontier_buckets"]["default"])
-                referenced.update(m["frontier_buckets"]["map"].values())
+        return self._sweep_dirs(_referenced_dirs(m for _, m in self.snapshot_chain()))
+
+    def _sweep_dirs(self, referenced: set[str]) -> int:
+        """Delete every ``table/dir`` under the root not in ``referenced``
+        (``_commits`` is never swept); returns the number removed."""
         removed = 0
         for table in os.listdir(self.root):
             tdir = os.path.join(self.root, table)
-            if table in ("_commits",) or not os.path.isdir(tdir):
+            if table == "_commits" or not os.path.isdir(tdir):
                 continue
             for d in os.listdir(tdir):
-                rel = f"{table}/{d}"
-                if rel not in referenced:
+                if f"{table}/{d}" not in referenced:
                     shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
                     removed += 1
         return removed
+
+
+def _referenced_dirs(manifests) -> set[str]:
+    """Every ``table/dir`` the given manifests reference: append-table dirs,
+    the url_seen generation and the frontier bucket map."""
+    referenced: set[str] = set()
+    for m in manifests:
+        for dirs in m.get("tables", {}).values():
+            referenced.update(dirs)
+        if "seen" in m:
+            referenced.add(m["seen"]["dir"])
+        if "frontier_buckets" in m:
+            referenced.add(m["frontier_buckets"]["default"])
+            referenced.update(m["frontier_buckets"]["map"].values())
+    return referenced
 
 
 class RoundCommit:

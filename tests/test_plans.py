@@ -212,6 +212,45 @@ def test_dedup_spans_shuffles_on_window_hash(spark):
     assert "Exchange hashpartitioning(h#" in plan
 
 
+def _exchange_nodes(plan: str) -> list[str]:
+    return re.findall(r"[+:]- (?:\*\(\d+\) )?(ReusedExchange|Exchange) ", plan)
+
+
+def test_blocked_pairs_cap_adds_no_shuffle(spark):
+    """The kernel's hot-block cap is a window on the join key, whose hash
+    partitioning the sort-merge self-join reuses: the capped plan has as
+    many Exchange nodes as the uncapped one, and the second join side reads
+    a ReusedExchange. (AQE off for the plan, which otherwise defers
+    exchange reuse to execution; broadcast off, so the join is the
+    shuffled one a large block set gets.)"""
+    from crawler_spark.operators.dedup import blocked_pairs
+
+    rows = spark.range(20000).select(
+        F.col("id").alias("doc"), (F.col("id") % 997).alias("k"), (F.col("id") * 3).alias("c")
+    )
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        nodes = {
+            m: _exchange_nodes(
+                blocked_pairs(rows, "doc", "k", max_block=m, carry=("c",))
+                .select("doc_a", "doc_b")
+                .distinct()
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            for m in (None, 50)
+        }
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert len(nodes[50]) == len(nodes[None]), nodes
+    assert nodes[50].count("ReusedExchange") == 1, nodes
+
+
 def test_all_denied_round_commits_skipped_and_drains(spark, tmp_path):
     """A frontier whose every eligible row is robots-denied must flip those
     rows to skipped and DRAIN (oracle contract: denied -> skipped
