@@ -384,20 +384,10 @@ def crawl_overlap(
     """
     from crawler_spark.operators.sketches import kmv_overlap_summary
 
-    def _seen(wd: str) -> DataFrame | None:
-        # module contract: missing tables yield empty results, never
-        # exceptions — read_seen requires a committed bucketed seen table,
-        # so fall back to the plain table read (legacy catalogs), then None
-        cat = SnapshotCatalog(wd)
-        m = cat.current_manifest()
-        if m is not None and "seen" in m:
-            return cat.read_seen(spark).select("canonical")
-        df = _read(spark, wd, "url_seen")
-        return None if df is None else df.select("canonical")
-
-    a, b = _seen(workdir_a), _seen(workdir_b)
+    a, b = _read(spark, workdir_a, "url_seen"), _read(spark, workdir_b, "url_seen")
     if a is None or b is None:
         return {"error": "url_seen missing in one catalog", "k": k}
+    a, b = a.select("canonical"), b.select("canonical")
     row = kmv_overlap_summary(a, b, "canonical", k).collect()[0]
     return {
         "k": row["k"],

@@ -11,13 +11,20 @@ commit — atomic, parent-chained, time-travel-visible — and the ledger is a
 analog; Iceberg's format-version bump follows the same upgrade-by-metadata
 idea).
 
+This module is the only code that knows the older catalog layouts; the
+readers and writers in tables.py and plans/ assume the current one.
+``run_crawl`` applies every pending migration when it resumes a catalog
+(it is the writer, as for ``cleanup_orphan_seen``), and the CLI's
+``expire`` does so before expiring.
+
 Built-in migrations (each one a REAL upgrade path this repo's history
 needed):
 
 001 scheduled_cum_backfill — catalogs written before the cumulative
     scheduled-pages counter carry only per-round ``scheduled`` metrics;
-    resume's max_pages budget accounting needs the cumulative value to
-    survive snapshot expiry. Backfills it from the committed history.
+    resume reads its max_pages budget from the newest manifest's
+    cumulative value, which survives snapshot expiry. Backfills it from
+    the committed history — the only code that sums ``scheduled``.
 002 bucketed_url_seen — catalogs whose url_seen is a plain append table
     (the pre-bucketing layout) are rebuilt into the bucketed generation
     store (``stage_seen_init``), restoring the no-Exchange dedup plan.
@@ -36,7 +43,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from crawler_spark.tables import SnapshotCatalog
+from crawler_spark.tables import SnapshotCatalog, atomic_write
 
 __all__ = ["migrations_status", "migrate_to_latest", "LATEST_VERSION"]
 
@@ -61,8 +68,7 @@ def _apply_scheduled_cum(spark: SparkSession, cat: SnapshotCatalog) -> dict:
 
 def _needs_bucketed_seen(cat: SnapshotCatalog) -> bool:
     m = cat.current_manifest()
-    # .get("tables", {}): tolerate a manifest missing the key entirely, the
-    # same defensive read tables.py uses
+    # .get("tables", {}): an older manifest may lack the key entirely
     return (
         m is not None
         and "seen" not in m
@@ -109,12 +115,7 @@ def _read_ledger(workdir: str) -> list[dict]:
 
 def _append_ledger(workdir: str, entry: dict) -> None:
     entries = _read_ledger(workdir) + [entry]
-    path = _ledger_path(workdir)
-    with open(path + ".tmp", "w") as f:  # atomic, like manifests
-        json.dump(entries, f, indent=1)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(path + ".tmp", path)
+    atomic_write(_ledger_path(workdir), json.dumps(entries, indent=1))  # like manifests
 
 
 # -- public API ---------------------------------------------------------------

@@ -142,10 +142,13 @@ def embedding_neardup(
         )
     else:
         # not blocked_pairs: the exact mode is the all-pairs baseline the
-        # blocked paths are checked against, so it has no block key
+        # blocked paths are checked against, so it has no block key. The id
+        # order is a filter, not the join condition: Spark prepends a pushed
+        # predicate to the condition, so the cosine would run on all N^2
+        # ordered pairs before the cheap comparison cut them to half
         a = vectors.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"))
         b = vectors.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"))
-        pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
+        pairs = a.crossJoin(b).where(F.col("vec_a") < F.col("vec_b"))
     return (
         pairs.where(cosine(F.col("_va"), F.col("_vb")) >= threshold)
         .select("vec_a", "vec_b")

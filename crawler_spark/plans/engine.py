@@ -30,6 +30,7 @@ from crawler_spark.functions.urls import (
     sitemap_urls_udf,
     url_hash_col,
 )
+from crawler_spark.migrations import migrate_to_latest
 from crawler_spark.plans.round import FRONTIER_COLS, _robots_dims, run_round
 from crawler_spark.sources.sitemap import sitemap_frontier_rows
 from crawler_spark.tables import SnapshotCatalog
@@ -176,7 +177,7 @@ def run_crawl(
     cfg = cfg or CrawlConfig()
     # once per crawl, before anything is written: a bad robots table fails
     # here, not after init_state has committed a frontier
-    robots_dims = _robots_dims(robots_df, user_agent=cfg.user_agent)
+    robots_dim = _robots_dims(robots_df, user_agent=cfg.user_agent)
     catalog = SnapshotCatalog(workdir)
     if catalog.current_manifest() is None:
         init_state(spark, catalog, seeds, cfg, sitemaps_df=sitemaps_df)
@@ -184,24 +185,18 @@ def run_crawl(
         # resume path — we ARE the writer now: drop any part-files a killed
         # round staged but never committed, restoring the bucketed fast scan
         # (read_seen itself never deletes; a concurrent analytics reader must
-        # not race a live round's staged files)
+        # not race a live round's staged files), then bring an older catalog
+        # layout up to date
         catalog.cleanup_orphan_seen()
+        migrate_to_latest(spark, workdir)
 
-    # budget accounting across resume: prefer the newest committed CUMULATIVE
-    # counter — after expire_snapshots truncates the manifest chain, summing
-    # the partial history would undercount and overshoot max_pages. Catalogs
-    # from before the counter fall back to the sum (their chain is complete).
-    hist = catalog.metrics_history()
-    scheduled_total = next(
-        (m["scheduled_cum"] for m in reversed(hist) if "scheduled_cum" in m),
-        None,
-    )
-    if scheduled_total is None:
-        scheduled_total = sum(m.get("scheduled", 0) for m in hist)
+    # the page budget across resume: every current manifest carries the
+    # cumulative counter, which survives expire_snapshots' truncation
+    scheduled_total = catalog.current_manifest()["metrics"]["scheduled_cum"]
     rnd = catalog.current_round() + 1
     rounds, stopped = [], None
     while rnd < cfg.max_rounds:
-        m = run_round(spark, catalog, documents_df, robots_dims, cfg, rnd, scheduled_total)
+        m = run_round(spark, catalog, documents_df, robots_dim, cfg, rnd, scheduled_total)
         if m.get("stopped"):
             stopped = m["stopped"]
             break

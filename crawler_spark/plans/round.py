@@ -87,11 +87,12 @@ def order_exprs():
     ]
 
 
-def _robots_dims(robots_df: DataFrame, user_agent: str = "*"):
-    """Robots rules dim: per host, rules ordered by file position, plus a
-    crawl-delay dim. Decision semantics are stdlib RobotFileParser's (the
-    reference delegates to it, robots.py:82): the FIRST rule whose prefix
-    matches the URL path decides allow/deny; no match or no rules = allow.
+def _robots_dims(robots_df: DataFrame, user_agent: str = "*") -> DataFrame:
+    """The robots dim: per host, the rules ordered by file position and the
+    max crawl delay, from one aggregation, so a round joins it once.
+    Decision semantics are stdlib RobotFileParser's (the reference
+    delegates to it, robots.py:82): the FIRST rule whose prefix matches the
+    URL path decides allow/deny; no match or no rules = allow.
 
     Group selection happens HERE, so no caller can forget it: tables from
     parse_robots_df (they carry entry_id) get stdlib best-entry selection
@@ -136,29 +137,29 @@ def _robots_dims(robots_df: DataFrame, user_agent: str = "*"):
     order = (
         F.col("rule_order") if "rule_order" in cols else F.lit(0)
     ).alias("o")
-    rules = robots_df.groupBy("host").agg(
+    return robots_df.groupBy("host").agg(
         F.array_sort(
             F.collect_list(
                 F.struct(order, F.col("path_prefix").alias("p"), F.col("allow").alias("a"))
             )
-        ).alias("rules")
+        ).alias("rules"),
+        F.max("crawl_delay").alias("crawl_delay"),
     )
-    delays = robots_df.groupBy("host").agg(F.max("crawl_delay").alias("crawl_delay"))
-    return rules, delays
 
 
 def run_round(
     spark: SparkSession,
     catalog: SnapshotCatalog,
     documents_df: DataFrame,
-    robots_dims: tuple[DataFrame, DataFrame],
+    robots_dim: DataFrame,
     cfg: CrawlConfig,
     rnd: int,
     scheduled_total: int,
 ) -> dict:
     """Execute round ``rnd``; returns metrics. Commits atomically on success.
 
-    ``robots_dims`` is the (rules, delays) pair from :func:`_robots_dims`.
+    ``robots_dim`` is the per-host rules + crawl-delay dim from
+    :func:`_robots_dims`.
     Returns {"stopped": reason} without committing when the crawl is done.
     The round body registers every cache it takes (its .persist() calls and
     the with_global_seq intermediate) in ``persisted`` and a finally-block
@@ -170,7 +171,7 @@ def run_round(
     persisted: list[DataFrame] = []
     try:
         return _run_round_body(
-            spark, catalog, documents_df, robots_dims, cfg, rnd,
+            spark, catalog, documents_df, robots_dim, cfg, rnd,
             scheduled_total, persisted,
         )
     finally:
@@ -182,7 +183,7 @@ def _run_round_body(
     spark: SparkSession,
     catalog: SnapshotCatalog,
     documents_df: DataFrame,
-    robots_dims: tuple[DataFrame, DataFrame],
+    robots_dim: DataFrame,
     cfg: CrawlConfig,
     rnd: int,
     scheduled_total: int,
@@ -203,11 +204,11 @@ def _run_round_body(
     )
 
     # -- robots compliance (F7): broadcast dim join + first-match predicate --
-    rules_dim, delays = robots_dims
     path = F.regexp_replace(F.col("canonical"), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", "")
     # host-scaled dim: broadcast is right to ~10^7 hosts; a 10^8-host
     # frontier switches this to a bucketed/shuffle join keyed like url_seen
-    with_rules = pending.join(F.broadcast(rules_dim), "host", "left")
+    # (the dim carries crawl_delay too: the politeness budget below reads it)
+    with_rules = pending.join(F.broadcast(robots_dim), "host", "left")
     # F.get, not element_at: ANSI mode (Spark 4 default) throws on an empty
     # match array; get returns null, which coalesces to fail-open allow
     first_match = F.get(
@@ -233,7 +234,7 @@ def _run_round_body(
     # global seq cutoff can never admit more than `remaining` rows total) and
     # bounds prune_max so priority-threshold pruning applies to every round
     budget = F.least(budget, F.lit(remaining))
-    with_budget = allowed.join(F.broadcast(delays), "host", "left").withColumn("budget", budget)
+    with_budget = allowed.withColumn("budget", budget)
     admitted = top_per_key(
         with_budget,
         key="host",

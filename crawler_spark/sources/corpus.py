@@ -58,14 +58,6 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-SEEDS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("priority", T.IntegerType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-    ]
-)
-
 ROBOTS_SCHEMA = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
@@ -266,10 +258,6 @@ def to_documents_df(spark: SparkSession, documents):
         for d in documents
     ]
     return spark.createDataFrame(rows, DOC_SCHEMA)
-
-
-def to_seeds_df(spark: SparkSession, seeds):
-    return spark.createDataFrame([(s["url"], s["priority"], s["depth"]) for s in seeds], SEEDS_SCHEMA)
 
 
 def to_robots_df(spark: SparkSession, robots):

@@ -47,13 +47,23 @@ candidate set shuffles, which is what makes the monotonically growing
 10^10-row seen set affordable per round (the Iceberg twin is a
 storage-partitioned join on `bucket(4096, url_hash)`). Snapshot semantics
 are preserved at FILE granularity: appends only ever add new part-files,
-the manifest's ``seen.files`` list names the committed ones, and reads
-first delete any orphan files a killed round left behind (exactly an
-Iceberg snapshot's file-level visibility, with orphan cleanup inlined).
+the manifest's ``seen.files`` list names the committed ones, reads scan
+only those while a killed round's orphan files exist, and the resuming
+writer deletes the orphans (an Iceberg snapshot's file-level visibility,
+with orphan cleanup by the writer).
+
+One resolver, ``_read_manifest``, turns a manifest into a table: current
+reads (``read``, whose only extra branch is the bucketed url_seen scan) and
+time-travel reads (``read_as_of``) both go through it. Writers assume the
+current format: every manifest carries the cumulative ``scheduled_cum``
+budget counter and a bucketed url_seen. A catalog in an older layout is
+brought up to date by ``migrations.py`` (``run_crawl`` applies it on
+resume), the only code that knows those layouts.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
@@ -67,6 +77,16 @@ from pyspark.sql import functions as F
 # distribution exactly matches the table's HashPartitioning (a superset join
 # key would make the planner fall back to a both-sides shuffle)
 SEEN_KEYS = ("url_hash", "canonical")
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` so that a kill leaves the old file or the
+    complete new one, never a truncated file."""
+    with open(path + ".tmp", "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(path + ".tmp", path)
 
 
 def _part_files(d: str) -> set[str]:
@@ -114,14 +134,29 @@ class SnapshotCatalog:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         m = self.current_manifest()
-        if m is None or table not in m["tables"] or not m["tables"][table]:
+        if table == "url_seen" and m is not None and "seen" in m:
+            return self.read_seen(spark)  # the bucketed hot path
+        return self._read_manifest(spark, m, table)
+
+    def _read_manifest(
+        self, spark: SparkSession, m: dict | None, table: str
+    ) -> DataFrame | None:
+        """``table`` exactly as manifest ``m`` committed it, or None: url_seen
+        through its committed file list, the frontier through its bucket map,
+        any other table from its data dirs."""
+        if m is None or not m["tables"].get(table):
             return None
         if table == "url_seen" and "seen" in m:
-            return self.read_seen(spark)
+            return self._scan_seen_files(spark, m["seen"], m["seen"]["files"])
         if table == "frontier" and "frontier_buckets" in m:
             return self._read_frontier_buckets(spark, m["frontier_buckets"])
-        paths = [os.path.join(self.root, p) for p in m["tables"][table]]
-        return spark.read.parquet(*paths)
+        return spark.read.parquet(*[os.path.join(self.root, p) for p in m["tables"][table]])
+
+    def _scan_seen_files(self, spark: SparkSession, meta: dict, files) -> DataFrame:
+        """Unbucketed scan of exactly ``files`` of the seen generation
+        ``meta`` — committed files only, so orphans never leak in."""
+        d = os.path.join(self.root, meta["dir"])
+        return spark.read.parquet(*[os.path.join(d, f) for f in sorted(files)])
 
     def _read_frontier_buckets(self, spark: SparkSession, fb: dict) -> DataFrame:
         """Assemble the frontier from its per-bucket dir assignments.
@@ -207,10 +242,8 @@ class SnapshotCatalog:
         (unbucketed — correctness over the saved Exchange; rare, and the
         resuming writer restores the fast path via cleanup_orphan_seen())."""
         meta = self.current_manifest()["seen"]
-        d = os.path.join(self.root, meta["dir"])
-        committed = set(meta["files"])
-        if _part_files(d) - committed:
-            return spark.read.parquet(*[os.path.join(d, f) for f in sorted(committed)])
+        if _part_files(os.path.join(self.root, meta["dir"])) - set(meta["files"]):
+            return self._scan_seen_files(spark, meta, meta["files"])
         name = self._ensure_seen_registered(spark, meta)
         spark.catalog.refreshTable(name)  # appends/prunes since last read
         return spark.table(name)
@@ -311,18 +344,7 @@ class SnapshotCatalog:
             raise ValueError(
                 f"snapshot as of round {round_no} expired (expire_snapshots)"
             )
-        if m is None or table not in m.get("tables", {}) or not m["tables"][table]:
-            return None
-        if table == "url_seen" and "seen" in m:
-            meta = m["seen"]
-            d = os.path.join(self.root, meta["dir"])
-            return spark.read.parquet(
-                *[os.path.join(d, f) for f in sorted(meta["files"])]
-            )
-        if table == "frontier" and "frontier_buckets" in m:
-            return self._read_frontier_buckets(spark, m["frontier_buckets"])
-        paths = [os.path.join(self.root, p) for p in m["tables"][table]]
-        return spark.read.parquet(*paths)
+        return self._read_manifest(spark, m, table)
 
     def read_increment(
         self, spark: SparkSession, table: str, from_round: int, to_round: int
@@ -348,7 +370,7 @@ class SnapshotCatalog:
                 "(expire_snapshots removed it; the increment base is gone)"
             )
         mt = self.manifest_as_of(to_round)
-        if mt is None or table not in mt.get("tables", {}):
+        if mt is None or table not in mt["tables"]:
             return None
         # lineage audit over the (from, to] window, newest-first chain
         for _, m in self.snapshot_chain():
@@ -364,17 +386,15 @@ class SnapshotCatalog:
                         "in the window (compaction/replace rewrites files)"
                     )
         if table == "url_seen" and "seen" in mt:
-            old = set(mf["seen"]["files"]) if mf and "seen" in mf else set()
             meta = mt["seen"]
-            new = [f for f in sorted(meta["files"]) if f not in old]
-            d = os.path.join(self.root, meta["dir"])
             if mf and "seen" in mf and mf["seen"]["dir"] != meta["dir"]:
                 raise ValueError(
                     f"incremental read of {table!r} undefined: seen-table "
                     "generation changed in the window (compaction)"
                 )
-            base = [os.path.join(d, f) for f in (new or sorted(meta["files"]))]
-            out = spark.read.parquet(*base)
+            old = set(mf["seen"]["files"]) if mf and "seen" in mf else set()
+            new = [f for f in meta["files"] if f not in old]
+            out = self._scan_seen_files(spark, meta, new or meta["files"])
             return out if new else out.limit(0)
         dirs_to = mt["tables"].get(table, [])
         dirs_from = set(mf["tables"].get(table, [])) if mf else set()
@@ -397,7 +417,6 @@ class SnapshotCatalog:
     def compact_frontier(
         self,
         spark: SparkSession,
-        partition_by: list[str] | None = None,
         max_age_rounds: int | None = None,
         horizon: float = 30.0,
     ) -> int:
@@ -445,17 +464,15 @@ class SnapshotCatalog:
             )
             keep = fr.where(pending | (age_round >= F.lit(cutoff))).drop("_last_round")
         dropped = frontier.count() - keep.count()
-        # tagged commit: the round's original manifest (with its scheduled
-        # metrics, needed by resume accounting) must survive
+        # tagged commit: the round's original manifest (with its per-round
+        # metrics, which metrics_history and time travel read) must survive
         commit = self.begin(self.current_round(), tag="compact")
-        commit.stage_replace("frontier", keep, partition_by=partition_by or ["host_bucket"])
+        commit.stage_replace("frontier", keep, partition_by=["host_bucket"])
         commit.set_metrics(compacted_rows=dropped, maintenance=True)
         commit.commit()
         return dropped
 
-    def remove_host(
-        self, spark: SparkSession, host: str, partition_by: list[str] | None = None
-    ) -> int:
+    def remove_host(self, spark: SparkSession, host: str) -> int:
         """E3 (queue.py:455-488): drop a host's PENDING frontier rows in one
         tagged maintenance commit (completed bookkeeping rows stay; combine
         with cfg.blocked_domains to stop re-discovery). Returns rows removed.
@@ -470,30 +487,26 @@ class SnapshotCatalog:
         commit = self.begin(
             self.current_round(), tag=f"rmhost-{zlib.crc32(host.encode()) % 10**8}"
         )
-        commit.stage_replace(
-            "frontier", frontier.where(~doomed), partition_by=partition_by or ["host_bucket"]
-        )
+        commit.stage_replace("frontier", frontier.where(~doomed), partition_by=["host_bucket"])
         commit.set_metrics(removed_host=host, removed_rows=removed, maintenance=True)
         commit.commit()
         return removed
 
-    def compact_table(
-        self, spark: SparkSession, table: str, partition_by: list[str] | None = None
-    ) -> int:
+    def compact_table(self, spark: SparkSession, table: str) -> int:
         """Merge an append-table's accumulated per-round data dirs into one
         (Iceberg rewrite_data_files analog). url_seen grows one dir per
         round; after many rounds the multi-path scan pays per-file overhead.
         Content-preserving by construction; returns dirs merged.
         """
-        if table == "url_seen" and (self.current_manifest() or {}).get("seen"):
-            return self.compact_seen(spark)
         m = self.current_manifest()
+        if table == "url_seen" and m is not None and "seen" in m:
+            return self.compact_seen(spark)
         if m is None or len(m["tables"].get(table, [])) <= 1:
             return 0
         n_dirs = len(m["tables"][table])
         df = self.read(spark, table)
         commit = self.begin(self.current_round(), tag=f"compact-{table}")
-        commit.stage_replace(table, df, partition_by=partition_by)
+        commit.stage_replace(table, df)
         commit.set_metrics(compacted_dirs=n_dirs, maintenance=True)
         commit.commit()
         return n_dirs
@@ -519,31 +532,23 @@ class SnapshotCatalog:
         Afterwards time travel reaches exactly the kept window: read_as_of /
         read_increment below it raise ValueError (Iceberg's "cannot find
         snapshot"), never silently misreport. Returns removal counts.
+
+        Resume's page budget is the newest manifest's ``scheduled_cum``; a
+        catalog from before that counter raises ValueError here, before
+        anything is deleted — its budget is the sum over the very history
+        this would remove, and migration 001 is what folds that sum in.
         """
         assert keep_last >= 1
         chain = self.snapshot_chain()
         if not chain:  # uninitialized catalog: nothing to expire, not an error
             return {"manifests": 0, "dirs": 0, "seen_files": 0}
+        if "scheduled_cum" not in chain[0][1]["metrics"]:
+            raise ValueError(
+                f"catalog at {self.root} has no scheduled_cum counter; run "
+                "`python scripts/crawl_analyze.py migrate --workdir ...` first"
+            )
         kept = chain[:keep_last]
         kept_names = {n for n, _ in kept}
-        # budget preservation: resume reads the newest committed
-        # scheduled_cum (engine.run_crawl); catalogs written before that
-        # counter existed only carry per-round "scheduled", whose sum is
-        # about to be truncated. Backfill the cumulative counter into the
-        # newest kept manifest BEFORE deleting the history it summarizes.
-        # Sum via metrics_history(), NOT the parent chain: a legacy
-        # (parentless) catalog's chain holds only CURRENT, while
-        # metrics_history falls back to the full round<=current scan.
-        newest_name, newest_m = kept[0]
-        if not any("scheduled_cum" in m.get("metrics", {}) for _, m in kept):
-            cum = sum(m.get("scheduled", 0) for m in self.metrics_history())
-            newest_m.setdefault("metrics", {})["scheduled_cum"] = cum
-            path = os.path.join(self.root, "_commits", newest_name)
-            with open(path + ".tmp", "w") as f:
-                json.dump(newest_m, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(path + ".tmp", path)
         ref_dirs = _referenced_dirs(m for _, m in kept)
         seen_files: dict[str, set[str]] = {}
         for _, m in kept:
@@ -616,33 +621,18 @@ class RoundCommit:
         self.round_no = round_no
         self.tag = tag
         self.parent = catalog._current_name()  # manifest this commit supersedes
-        prev = catalog.current_manifest()
-        self.tables: dict[str, list[str]] = (
-            {k: list(v) for k, v in prev["tables"].items()} if prev else {}
-        )
-        self.seen: dict | None = (
-            {**prev["seen"], "files": list(prev["seen"]["files"])}
-            if prev and "seen" in prev
-            else None
-        )
-        self.frontier_buckets: dict | None = (
-            {"default": prev["frontier_buckets"]["default"],
-             "map": dict(prev["frontier_buckets"]["map"])}
-            if prev and "frontier_buckets" in prev
-            else None
-        )
-        # the cumulative scheduled-pages counter survives EVERY commit, round
-        # or maintenance: expire_snapshots keeps only the newest manifests,
-        # and if those are all maintenance commits (compaction after the last
-        # round), resume's budget accounting must still find the counter —
-        # summing the truncated per-round history would undercount and let a
-        # resumed crawl overshoot max_pages. Round commits overwrite it via
-        # set_metrics with the fresh value.
-        self.metrics: dict = (
-            {"scheduled_cum": prev["metrics"]["scheduled_cum"]}
-            if prev and "scheduled_cum" in prev.get("metrics", {})
-            else {}
-        )
+        prev = copy.deepcopy(catalog.current_manifest()) or {}
+        self.tables: dict[str, list[str]] = prev.get("tables", {})
+        self.seen: dict | None = prev.get("seen")
+        self.frontier_buckets: dict | None = prev.get("frontier_buckets")
+        # the cumulative scheduled-pages counter is in EVERY manifest: a
+        # catalog's first commit starts it at 0 and every later commit, round
+        # or maintenance, carries it forward, so resume's budget is one read
+        # of the newest manifest however much history expire_snapshots has
+        # removed. Round commits overwrite it via set_metrics. Only catalogs
+        # from before the counter lack it (migrations.py, 001).
+        cum = prev["metrics"].get("scheduled_cum") if prev else 0
+        self.metrics: dict = {} if cum is None else {"scheduled_cum": cum}
         self.lineage: dict = {}
         self._committed = False
 
@@ -763,18 +753,11 @@ class RoundCommit:
             manifest["seen"] = self.seen
         if self.frontier_buckets is not None:
             manifest["frontier_buckets"] = self.frontier_buckets
-        path = os.path.join(self.catalog.root, "_commits", name)
         # manifest lands atomically too: a kill mid-write must leave either
         # no file or a complete one, never a truncated orphan
-        with open(path + ".tmp", "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(path + ".tmp", path)
-        tmp = self.catalog._current_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.catalog._current_path())
+        atomic_write(
+            os.path.join(self.catalog.root, "_commits", name),
+            json.dumps(manifest, indent=1),
+        )
+        atomic_write(self.catalog._current_path(), name)
         self._committed = True

@@ -80,7 +80,8 @@ def main() -> None:
     pe = sub.add_parser(
         "expire",
         help="expire old snapshots (WRITER-ONLY maintenance; bounds disk, "
-        "truncates time travel to the kept window)",
+        "truncates time travel to the kept window; applies pending "
+        "migrations first)",
     )
     pe.add_argument("--workdir", required=True)
     pe.add_argument("--keep-last", type=int, default=3, dest="keep_last")
@@ -202,8 +203,10 @@ def main() -> None:
         print(json.dumps(analytics.workdir_status(spark, wds),
                          indent=2, default=str))
     elif args.cmd == "expire":
+        from crawler_spark.migrations import migrate_to_latest
         from crawler_spark.tables import SnapshotCatalog
 
+        migrate_to_latest(spark, args.workdir)  # expiry needs the budget counter
         removed = SnapshotCatalog(args.workdir).expire_snapshots(args.keep_last)
         print(json.dumps(removed, indent=2))
     elif args.cmd == "migrate":

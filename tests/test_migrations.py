@@ -104,3 +104,63 @@ def test_modern_catalog_has_nothing_pending(spark, tmp_path):
     )
     st = migrations_status(wd)
     assert st["pending"] == []
+
+
+def test_init_state_catalog_has_nothing_pending(spark, tmp_path):
+    """The first manifest of a catalog already carries the budget counter,
+    so a crawl that has only been initialised needs no migration."""
+    from crawler_spark.config import CrawlConfig
+    from crawler_spark.plans.engine import init_state
+    from crawler_spark.sources.corpus import gen_corpus
+
+    _, seeds, _ = gen_corpus(hosts=2, pages_per_host=4, seed=7)
+    wd = str(tmp_path / "init")
+    init_state(spark, SnapshotCatalog(wd), seeds, CrawlConfig(n_host_buckets=2))
+    assert SnapshotCatalog(wd).current_manifest()["metrics"]["scheduled_cum"] == 0
+    assert migrations_status(wd)["pending"] == []
+
+
+def test_legacy_catalog_resumes_like_uninterrupted_crawl(spark, tmp_path):
+    """A crawl whose catalog is in the pre-migration layout (plain url_seen
+    append table, no budget counter) resumes through run_crawl: the resume
+    migrates it, and the crawl ends exactly where an uninterrupted crawl
+    (the oracle simulator's) does, inside the page budget (migration 001
+    restores the counter)."""
+    from crawler_spark.config import CrawlConfig
+    from crawler_spark.plans.engine import read_crawl_order, run_crawl
+    from crawler_spark.sources.corpus import gen_corpus, to_documents_df, to_robots_df
+    from oracle.simulator import CrawlSimulator, SimConfig
+
+    documents, seeds, robots = gen_corpus(hosts=3, pages_per_host=6, seed=42)
+    args = (to_documents_df(spark, documents), to_robots_df(spark, robots), seeds)
+
+    def cfg(rounds):
+        return CrawlConfig(max_pages=40, max_rounds=rounds, n_host_buckets=4)
+
+    sim = CrawlSimulator(documents, seeds, robots, SimConfig(max_pages=40, max_rounds=6)).run()
+
+    wd = str(tmp_path / "legacy")
+    run_crawl(spark, wd, *args, cfg(2))
+    # rewrite the committed state in the old layout: url_seen as a plain
+    # parquet dir named in "tables", no "seen" entry, no counter anywhere
+    cat = SnapshotCatalog(wd)
+    plain = "url_seen/plain"
+    cat.read_seen(spark).write.parquet(os.path.join(wd, plain))
+    cdir = os.path.join(wd, "_commits")
+    for name in os.listdir(cdir):
+        p = os.path.join(cdir, name)
+        with open(p) as f:
+            m = json.load(f)
+        m["metrics"].pop("scheduled_cum", None)
+        if name == cat._current_name():
+            del m["seen"]
+            m["tables"]["url_seen"] = [plain]
+        with open(p, "w") as f:
+            json.dump(m, f)
+    assert [p["version"] for p in migrations_status(wd)["pending"]] == ["001", "002"]
+
+    out = run_crawl(spark, wd, *args, cfg(6))
+    assert read_crawl_order(spark, wd) == sim.crawl_order
+    # the budget binds after the resume point: rounds 0-1 schedule 15 pages
+    assert out["stopped"] == "max_pages" and out["scheduled_total"] <= 40
+    assert migrations_status(wd)["pending"] == []

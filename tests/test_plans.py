@@ -251,6 +251,22 @@ def test_blocked_pairs_cap_adds_no_shuffle(spark):
     assert nodes[50].count("ReusedExchange") == 1, nodes
 
 
+def test_embedding_exact_mode_compares_ids_before_cosine(spark):
+    """The exact all-pairs mode must cut the N^2 ordered pairs to a < b
+    before it computes a cosine: the id comparison leads the join
+    condition (Spark prepends a pushed-down filter to an existing one)."""
+    from crawler_spark.operators.similarity import embedding_neardup
+
+    vec = spark.range(50).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (d + 1)) for d in range(4)]).alias("embedding"),
+    )
+    plan = embedding_neardup(vec, threshold=0.4)._jdf.queryExecution().optimizedPlan().toString()
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert len(joins) == 1, plan
+    assert re.search(r"Join \w+, \(\(vec_a#\d+L? < vec_b#\d+L?\) AND ", joins[0]), joins[0]
+
+
 def test_all_denied_round_commits_skipped_and_drains(spark, tmp_path):
     """A frontier whose every eligible row is robots-denied must flip those
     rows to skipped and DRAIN (oracle contract: denied -> skipped

@@ -505,3 +505,13 @@ def test_bench_queries_note_never_points_at_none():
     assert bench.queries_note(7, None) == "top-5 slowest of 7; full map on the line above"
     assert bench.queries_note(7, "/x/q.json").endswith(" and in /x/q.json")
     assert "skipped" in bench.queries_note(0, None)
+
+
+def test_bench_times_registry_minus_untimed():
+    """bench.py's timed list is derived from the registry: every opt-out
+    names a registry entry, and everything else is timed."""
+    import bench
+    from crawler_spark.queries import REGISTRY
+
+    assert bench.UNTIMED <= set(REGISTRY), bench.UNTIMED - set(REGISTRY)
+    assert bench.timed_queries(REGISTRY) == [n for n in REGISTRY if n not in bench.UNTIMED]

@@ -91,6 +91,19 @@ def test_increment_url_seen_matches_as_of_difference(spark, crawled):
     assert inc == late - early
 
 
+def test_read_as_of_current_round_equals_read(spark, crawled):
+    # one resolver serves both reads: as of the current round, every table
+    # (bucket-mapped frontier, url_seen file list, append tables) reads the
+    # same rows as the current read
+    cur = crawled.current_round()
+    for table in ("frontier", "url_seen", "crawl_order", "pages"):
+        now, as_of = crawled.read(spark, table), crawled.read_as_of(spark, table, cur)
+        cols = sorted(now.columns)
+        assert sorted(as_of.columns) == cols, table
+        want = sorted(map(tuple, now.select(*cols).collect()))
+        assert want and sorted(map(tuple, as_of.select(*cols).collect())) == want, table
+
+
 def test_metrics_history_matches_snapshot_chain(crawled):
     # the counters each round COMMITS to its manifest are the same counters
     # the catalog reads back via the parent chain (crawl_round_metrics's
@@ -159,10 +172,13 @@ def test_budget_counter_survives_maintenance_and_expiry(spark, tmp_path):
     """The cumulative scheduled counter must survive two truncation paths:
     (a) a maintenance commit becoming the newest snapshot (it carries the
     parent's counter forward), and (b) expire_snapshots on a PRE-COUNTER
-    catalog (the counter is backfilled into the newest kept manifest from
-    the full chain before that chain is deleted)."""
+    catalog: it refuses before deleting anything, and after
+    migrate_to_latest (migration 001 sums the full chain) the kept window
+    carries the full-chain sum."""
     import json
     import os
+
+    from crawler_spark.migrations import migrate_to_latest
 
     documents, seeds, robots = gen_corpus(hosts=2, pages_per_host=6, seed=13)
     wd = str(tmp_path / "cnt")
@@ -185,8 +201,8 @@ def test_budget_counter_survives_maintenance_and_expiry(spark, tmp_path):
     hist = cat.metrics_history()
     assert len(hist) == 1 and hist[0]["scheduled_cum"] == cum
 
-    # (b) pre-counter catalog: strip the counter everywhere, expire, and the
-    # newest kept manifest is backfilled with the full-chain sum
+    # (b) pre-counter catalog: strip the counter everywhere; expiry refuses
+    # until the migration has folded the full-chain sum into a manifest
     documents, seeds, robots = gen_corpus(hosts=2, pages_per_host=6, seed=17)
     wd2 = str(tmp_path / "pre")
     run_crawl(
@@ -205,6 +221,12 @@ def test_budget_counter_survives_maintenance_and_expiry(spark, tmp_path):
         with open(p, "w") as f:
             json.dump(m, f)
     full_sum = sum(m.get("scheduled", 0) for m in cat2.metrics_history())
+    manifests = sorted(os.listdir(cdir))
+    with pytest.raises(ValueError, match="crawl_analyze.py migrate"):
+        cat2.expire_snapshots(keep_last=2)
+    assert sorted(os.listdir(cdir)) == manifests  # refused before deleting
+    migrate_to_latest(spark, wd2)
     cat2.expire_snapshots(keep_last=2)
     hist2 = cat2.metrics_history()
+    assert len(hist2) == 2
     assert [m["scheduled_cum"] for m in hist2 if "scheduled_cum" in m] == [full_sum]
