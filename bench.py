@@ -142,6 +142,7 @@ def bench_frontier(spark: SparkSession, n: int) -> dict:
         top_per_key,
         with_global_seq,
     )
+    from crawler_spark.plans.round import order_exprs
 
     data_dir = os.environ.get("BENCH_DATA_DIR", f"/dev/shm/crawler_spark_bench/n{n}")
     paths = {t: f"{data_dir}/{t}.parquet" for t in ("frontier", "seen", "cand")}
@@ -156,7 +157,7 @@ def bench_frontier(spark: SparkSession, n: int) -> dict:
         _seen_urls(spark, n // 2, n + n // 2).repartition(64).write.mode("overwrite").parquet(paths["cand"])
     seen_bkt = _bucketed_seen(spark, 0, n, data_dir, "1x")
 
-    order = [F.desc("priority"), F.asc("depth"), F.asc("discovered_at"), F.asc("canonical")]
+    order = order_exprs()
     # 7 reps: under hypervisor steal bursts (vmstat st column has been
     # observed at 10-36% on this host) the minimum of few reps can still be
     # a stolen rep — two driver rounds in a row drew a schedule min 2-4x the

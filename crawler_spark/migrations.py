@@ -43,6 +43,7 @@ import time
 
 from pyspark.sql import SparkSession
 
+from crawler_spark.config import CrawlConfig
 from crawler_spark.tables import SnapshotCatalog, atomic_write
 
 __all__ = ["migrations_status", "migrate_to_latest", "LATEST_VERSION"]
@@ -56,7 +57,7 @@ def _needs_scheduled_cum(cat: SnapshotCatalog) -> bool:
     return m is not None and "scheduled_cum" not in m.get("metrics", {})
 
 
-def _apply_scheduled_cum(spark: SparkSession, cat: SnapshotCatalog) -> dict:
+def _apply_scheduled_cum(spark: SparkSession, cat: SnapshotCatalog, _buckets: int) -> dict:
     # the committed per-round history is the source of truth; maintenance
     # rounds carry no 'scheduled' key and contribute 0
     cum = sum(int(h.get("scheduled", 0) or 0) for h in cat.metrics_history())
@@ -76,11 +77,8 @@ def _needs_bucketed_seen(cat: SnapshotCatalog) -> bool:
     )
 
 
-def _apply_bucketed_seen(spark: SparkSession, cat: SnapshotCatalog) -> dict:
-    from crawler_spark.config import CrawlConfig
-
+def _apply_bucketed_seen(spark: SparkSession, cat: SnapshotCatalog, buckets: int) -> dict:
     df = cat.read(spark, "url_seen")
-    buckets = CrawlConfig().n_seen_buckets
     commit = cat.begin(cat.current_round(), tag="migrate-002")
     # no pre-count: url_seen is the catalog's largest table and the rewrite
     # inside stage_seen_init is already one full read — a count would double
@@ -147,13 +145,16 @@ def migrations_status(workdir: str) -> dict:
     return {"current": current, "applied": ledger, "pending": pending}
 
 
-def migrate_to_latest(spark: SparkSession, workdir: str) -> dict:
+def migrate_to_latest(
+    spark: SparkSession, workdir: str, n_seen_buckets: int = CrawlConfig.n_seen_buckets
+) -> dict:
     """Apply every pending migration in order (``migrate_to_latest`` of the
-    reference). Idempotent: a second call finds nothing pending. Each
-    application is one atomic maintenance commit plus one ledger append;
-    a kill between the two re-runs the migration next time, which every
-    ``apply`` tolerates (001 rewrites the same value; 002 re-inits the
-    seen generation — content-preserving either way)."""
+    reference). ``n_seen_buckets`` sizes a rebuilt url_seen (002): a
+    resuming crawl passes its own setting. Idempotent: a second call finds
+    nothing pending. Each application is one atomic maintenance commit plus
+    one ledger append; a kill between the two re-runs the migration next
+    time, which every ``apply`` tolerates (001 rewrites the same value; 002
+    re-inits the seen generation — content-preserving either way)."""
     # forward-compat guard FIRST: a ledger from a newer writer must refuse
     # BEFORE any apply mutates the catalog (a newer format could look
     # "unmigrated" to this build's needed() probes — e.g. a future seen
@@ -165,7 +166,7 @@ def migrate_to_latest(spark: SparkSession, workdir: str) -> dict:
         cat = SnapshotCatalog(workdir)  # re-read state after prior step
         if not needed(cat):
             continue
-        detail = apply(spark, cat)
+        detail = apply(spark, cat, n_seen_buckets)
         entry = {
             "version": version,
             "name": name,

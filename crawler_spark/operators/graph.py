@@ -1,4 +1,4 @@
-"""Link-graph analytics over crawl output — integer-arithmetic PageRank.
+"""Link-graph analytics over crawl output — integer-arithmetic ranking.
 
 The reference crawler materializes a links table (src, dst, is_internal;
 /root/reference/src/crawler/storage/database.py link rows) but never ranks
@@ -9,8 +9,8 @@ so it is first-class here.
 ``pagerank`` is the standard power iteration expressed as DataFrame
 join+aggregate rounds — but in SCALED INTEGER arithmetic instead of doubles:
 
-    r0(v)   = scale                         (unnormalized per-node convention)
-    r_i(v)  = (15*scale) DIV 100  +  (85 * sum_{u->v} (r_{i-1}(u) DIV out(u))) DIV 100
+    r0(v)   = PR_SCALE                      (unnormalized per-node convention)
+    r_i(v)  = (15*PR_SCALE) DIV 100  +  (85 * sum_{u->v} (r_{i-1}(u) DIV out(u))) DIV 100
 
 Floor division loses a little probability mass per round (documented,
 deterministic); in exchange every intermediate is an exact int64, so the
@@ -21,15 +21,20 @@ double-precision PageRank can NEVER be value-hashed across engines: partial
 aggregation order flips low bits — see the decimal-sum recipes in
 queries.py.)
 
+One loop per recurrence: PageRank is TrustRank with every node a seed, so
+both run :func:`_seeded_rank`; OPIC shares its :func:`_spread` step; HITS
+is SALSA without the degree division, so both run :func:`_hub_auth`.
+
 Scale design (10^10 edges): each iteration is one equality-join of edges
 against the rank table on src (both sides hash-partitioned on the join key —
 co-partitioned across iterations since the key never changes) and one
 groupBy(dst) sum with map-side partial aggregation. Dangling-node mass is
 dropped rather than redistributed (redistribution needs a global scalar per
 round — one extra tiny agg — omitted to keep the oracle recurrence local).
-``checkpoint_every`` truncates the growing lineage with localCheckpoint for
-long runs; the default 0 keeps the plan pure-lazy for short ones (the
-registry entry runs n_iter=5 unchecked — plan depth is linear in n_iter).
+Lineage: every fixed-iteration loop follows :func:`_truncated` — plans up
+to 8 iterations stay pure-lazy (the registry entries run n_iter <= 5, plan
+depth is linear in n_iter), longer runs localCheckpoint every 3rd
+iteration.
 """
 
 from __future__ import annotations
@@ -38,58 +43,84 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 PR_SCALE = 1_000_000_000  # rank fixed-point scale: 1.0 == 10^9
+HITS_SCALE = 1_000_000  # hub/authority fixed point: 1.0 == 10^6
 
 
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    n_iter: int = 5,
-    scale: int = PR_SCALE,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
-    """Integer power-iteration PageRank; returns (node, pr) with pr int64.
-
-    Nodes are every id appearing as src or dst; self-loops should be
-    filtered by the caller. int64 headroom: sum of in-contributions per node
-    is bounded by n_nodes * scale, so 85 * sum stays under 2^63 for
-    n_nodes * scale < 10^17 (e.g. 10^8 nodes at the default scale).
-
-    ``checkpoint_every=None`` (the default) picks a safe cadence
-    automatically: pure-lazy for short runs (n_iter <= 8 — plan depth is
-    linear in n_iter and the registry's n_iter=5 plan stays byte-identical),
-    localCheckpoint every 3 iterations beyond that — a 20+-iteration
-    production run must not build 20-deep join lineage (the measured
-    hits_scores 124 s -> 5 s lesson; VERDICT r3 #3).
-    """
-    if checkpoint_every is None:
-        checkpoint_every = 0 if n_iter <= 8 else 3
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    contrib_src = e.join(deg, "src")  # (src, dst, outdeg): static across rounds
-    nodes = (
+def _nodes(e: DataFrame) -> DataFrame:
+    """(node): every id appearing as src or dst of an edge table."""
+    return (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    teleport = (15 * scale) // 100
-    ranks = nodes.withColumn("pr", F.lit(scale).cast("long"))
+
+
+def _truncated(df: DataFrame, i: int, n_iter: int) -> DataFrame:
+    """The lineage rule of every fixed-iteration loop, applied to the state
+    after iteration ``i`` (0-based) of ``n_iter``: pure-lazy for short runs
+    (n_iter <= 8), otherwise localCheckpoint after every 3rd iteration but
+    the last — a 20+-iteration production run must not build 20-deep join
+    lineage (the measured hits_scores 124 s -> 5 s lesson)."""
+    if n_iter > 8 and (i + 1) % 3 == 0 and i + 1 < n_iter:
+        return df.localCheckpoint(eager=False)
+    return df
+
+
+def _contrib(e: DataFrame) -> DataFrame:
+    """(src, dst, outdeg) over a distinct edge table: the static side of
+    every spread step."""
+    return e.join(e.groupBy("src").agg(F.count("*").alias("outdeg")), "src")
+
+
+def _spread(contrib: DataFrame, state: DataFrame, col: str) -> DataFrame:
+    """(dst, m): each node's ``col`` split over its out-edges by floor
+    division and summed per destination — the edges-vs-state equality join
+    plus map-side-combinable groupBy(dst) sum shared by the seeded rank and
+    OPIC."""
+    return (
+        contrib.join(state, contrib.src == state.node)
+        .select("dst", F.expr(f"{col} DIV outdeg").alias("_c"))
+        .groupBy("dst")
+        .agg(F.sum("_c").alias("m"))
+    )
+
+
+def _seeded_rank(contrib: DataFrame, nodes: DataFrame, n_iter: int) -> DataFrame:
+    """(node, pr): the seeded-teleport fixed point over ``nodes`` (node,
+    _seed) with _seed in {0, 1}:
+
+        r0(v)  = _seed(v) * PR_SCALE
+        r_i(v) = _seed(v) * (15*PR_SCALE) DIV 100
+                 + (85 * sum_{u->v} (r_{i-1}(u) DIV out(u))) DIV 100
+    """
+    teleport = (15 * PR_SCALE) // 100
+    seed = F.col("_seed").cast("long")
+    ranks = nodes.select("node", (seed * PR_SCALE).alias("pr"))
     for i in range(n_iter):
-        sums = (
-            contrib_src.join(ranks, contrib_src.src == ranks.node)
-            .select("dst", F.expr("pr DIV outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
+        sums = _spread(contrib, ranks, "pr")
+        ranks = _truncated(
+            nodes.join(sums, nodes.node == sums.dst, "left").select(
+                "node",
+                (seed * teleport + F.expr("(85 * coalesce(m, 0L)) DIV 100"))
+                .cast("long")
+                .alias("pr"),
+            ),
+            i,
+            n_iter,
         )
-        ranks = nodes.join(sums, nodes.node == sums.dst, "left").select(
-            "node",
-            (
-                F.lit(teleport) + F.expr("(85 * coalesce(m, 0L)) DIV 100")
-            ).cast("long").alias("pr"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks
+
+
+def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
+    """Integer power-iteration PageRank; returns (node, pr) with pr int64.
+
+    Nodes are every id appearing as src or dst; self-loops should be
+    filtered by the caller. int64 headroom: sum of in-contributions per node
+    is bounded by n_nodes * PR_SCALE, so 85 * sum stays under 2^63 for
+    n_nodes * PR_SCALE < 10^17 (e.g. 10^8 nodes).
+    """
+    e = edges.select("src", "dst").distinct()
+    return _seeded_rank(_contrib(e), _nodes(e).withColumn("_seed", F.lit(1)), n_iter)
 
 
 # ----------------------------------------------------- triangle counting
@@ -172,89 +203,36 @@ def clustering_summary(edges: DataFrame, top_n: int = 20) -> DataFrame:
 
 # ------------------------------------------------------ HITS (hubs/authorities)
 
-HITS_SCALE = 1_000_000  # score fixed point: 1.0 == 10^6
+def _half_step(
+    e: DataFrame, nodes: DataFrame, score: DataFrame, frm: str, to: str, damped: bool
+) -> DataFrame:
+    """(node, score): one HITS/SALSA half-step. Each ``frm`` endpoint's
+    score travels along its edges (SALSA: divided by its ``frm``-side
+    degree first), arrivals are summed per ``to`` node, and the dense
+    result is max-normalized to HITS_SCALE by integer division.
 
-
-def hits(edges: DataFrame, n_iter: int = 3, scale: int = HITS_SCALE) -> DataFrame:
-    """Integer HITS (Kleinberg 1999): returns (node, auth, hub), both int64.
-
-    auth_i(v) = sum of hub_{i-1}(u) over edges u->v; hub_i(v) = sum of
-    auth_i(w) over v->w; after every half-step scores renormalize to
-    max = ``scale`` by integer division — max-normalization instead of the
-    textbook L2 because max is exactly computable in int64 and keeps every
-    intermediate bit-identical across engines and aggregation orders (same
-    reasoning as the fixed-point pagerank above; the DuckDB oracle unrolls
-    the identical recurrence). Headroom: raw sums are bounded by
-    max_degree * scale and the renormalization multiplies by scale, so
-    int64 holds while max_degree < 2^63 / scale^2 ~ 9.2e6 — a web-scale
-    run with hotter hubs raises scale down / shifts to 10^5.
-
-    Scale shape per iteration: two equality joins of the static edge list
-    against the current score table (co-partitioned on the join key across
-    rounds) + two map-side-combinable groupBy sums + one tiny broadcast max.
-    Each dense score table is lazily localCheckpointed: the max-normalizer
+    The dense table is lazily localCheckpointed: the max-normalizer
     broadcasts a 1-row agg of it, and without truncation that side plan
     would re-evaluate the full upstream lineage once per half-step
-    (exponential in n_iter — measured 124 s -> ~5 s at n_iter=3).
-    """
-    if n_iter < 1:
-        raise ValueError("n_iter must be >= 1")
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+    (exponential in n_iter — measured 124 s -> ~5 s at n_iter=3)."""
+    if damped:
+        deg = e.groupBy(frm).agg(F.count("*").alias("_deg"))
+        score = score.join(deg, score.node == deg[frm]).select(
+            "node", F.expr("score DIV _deg").alias("score")
+        )
+    raw = e.join(score, e[frm] == score.node).groupBy(to).agg(F.sum("score").alias("m"))
+    dense = nodes.join(raw, nodes.node == raw[to], "left").select(
+        "node", F.coalesce(F.col("m"), F.lit(0).cast("long")).alias("raw")
+    ).localCheckpoint(eager=False)
+    top = dense.agg(F.greatest(F.max("raw"), F.lit(1).cast("long")).alias("top"))
+    return dense.crossJoin(F.broadcast(top)).select(
+        "node", F.expr(f"(raw * {HITS_SCALE}) DIV top").alias("score")
     )
-    hub = nodes.withColumn("hub", F.lit(scale).cast("long"))
-    auth = None
-    for _ in range(n_iter):
-        a_raw = (
-            e.join(hub, e.src == hub.node)
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("m"))
-        )
-        a_dense = nodes.join(a_raw, nodes.node == a_raw.dst, "left").select(
-            "node", F.coalesce(F.col("m"), F.lit(0).cast("long")).alias("ar")
-        ).localCheckpoint(eager=False)
-        amax = a_dense.agg(F.greatest(F.max("ar"), F.lit(1).cast("long")).alias("amax"))
-        auth = a_dense.crossJoin(F.broadcast(amax)).select(
-            "node", F.expr(f"(ar * {scale}) DIV amax").alias("auth")
-        )
-        h_raw = (
-            e.join(auth, e.dst == auth.node)
-            .groupBy("src")
-            .agg(F.sum("auth").alias("m"))
-        )
-        h_dense = nodes.join(h_raw, nodes.node == h_raw.src, "left").select(
-            "node", F.coalesce(F.col("m"), F.lit(0).cast("long")).alias("hr")
-        ).localCheckpoint(eager=False)
-        hmax = h_dense.agg(F.greatest(F.max("hr"), F.lit(1).cast("long")).alias("hmax"))
-        hub = h_dense.crossJoin(F.broadcast(hmax)).select(
-            "node", F.expr(f"(hr * {scale}) DIV hmax").alias("hub")
-        )
-    return auth.join(hub, "node")
 
 
-def salsa(edges: DataFrame, n_iter: int = 3, scale: int = HITS_SCALE) -> DataFrame:
-    """Integer SALSA (Lempel & Moran 2000): returns (node, auth, hub).
-
-    HITS on the DEGREE-NORMALIZED bipartite random walk — each propagation
-    divides a node's score by its degree before it travels:
-    auth_i(v) = sum over u->v of hub_{i-1}(u) div outdeg(u);
-    hub_i(u)  = sum over u->v of auth_i(v) div indeg(v);
-    then each half-step max-normalizes to ``scale`` exactly like hits().
-    The normalization damps the tightly-knit-community effect that lets a
-    small dense subgraph capture HITS entirely. Truncating integer
-    division per NODE (before the edge join) is part of the value
-    contract the DuckDB twin reproduces bit-for-bit.
-
-    Scale shape per iteration: degrees are two static aggregates computed
-    once; the per-node contribution (score div degree) is one projection
-    joined against the static edge list exactly as in hits() — two
-    equality joins + two map-side-combinable sums + one broadcast max per
-    half-step. Same int64 headroom argument as hits(): contributions are
-    <= scale, so raw sums stay under max_degree * scale.
-    """
+def _hub_auth(edges: DataFrame, n_iter: int, damped: bool) -> DataFrame:
+    """(node, auth, hub): the HITS/SALSA loop — auth from hubs along
+    src->dst, then hubs from auth along dst->src, ``n_iter`` times."""
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
     e = (
@@ -263,39 +241,54 @@ def salsa(edges: DataFrame, n_iter: int = 3, scale: int = HITS_SCALE) -> DataFra
         .distinct()
         .localCheckpoint(eager=False)
     )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
-    indeg = e.groupBy("dst").agg(F.count("*").alias("ind"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    hub = nodes.withColumn("hub", F.lit(scale).cast("long"))
-    auth = None
+    nodes = _nodes(e)
+    hub = nodes.withColumn("score", F.lit(HITS_SCALE).cast("long"))
     for _ in range(n_iter):
-        fwd = hub.join(outdeg, hub.node == outdeg.src).select(
-            "node", F.expr("hub DIV od").alias("c")
-        )
-        a_raw = e.join(fwd, e.src == fwd.node).groupBy("dst").agg(F.sum("c").alias("m"))
-        a_dense = nodes.join(a_raw, nodes.node == a_raw.dst, "left").select(
-            "node", F.coalesce(F.col("m"), F.lit(0).cast("long")).alias("ar")
-        ).localCheckpoint(eager=False)
-        amax = a_dense.agg(F.greatest(F.max("ar"), F.lit(1).cast("long")).alias("amax"))
-        auth = a_dense.crossJoin(F.broadcast(amax)).select(
-            "node", F.expr(f"(ar * {scale}) DIV amax").alias("auth")
-        )
-        bwd = auth.join(indeg, auth.node == indeg.dst).select(
-            "node", F.expr("auth DIV ind").alias("c")
-        )
-        h_raw = e.join(bwd, e.dst == bwd.node).groupBy("src").agg(F.sum("c").alias("m"))
-        h_dense = nodes.join(h_raw, nodes.node == h_raw.src, "left").select(
-            "node", F.coalesce(F.col("m"), F.lit(0).cast("long")).alias("hr")
-        ).localCheckpoint(eager=False)
-        hmax = h_dense.agg(F.greatest(F.max("hr"), F.lit(1).cast("long")).alias("hmax"))
-        hub = h_dense.crossJoin(F.broadcast(hmax)).select(
-            "node", F.expr(f"(hr * {scale}) DIV hmax").alias("hub")
-        )
-    return auth.join(hub, "node")
+        auth = _half_step(e, nodes, hub, "src", "dst", damped)
+        hub = _half_step(e, nodes, auth, "dst", "src", damped)
+    return auth.select("node", F.col("score").alias("auth")).join(
+        hub.select("node", F.col("score").alias("hub")), "node"
+    )
+
+
+def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+    """Integer HITS (Kleinberg 1999): returns (node, auth, hub), both int64.
+
+    auth_i(v) = sum of hub_{i-1}(u) over edges u->v; hub_i(v) = sum of
+    auth_i(w) over v->w; after every half-step scores renormalize to
+    max = HITS_SCALE by integer division — max-normalization instead of the
+    textbook L2 because max is exactly computable in int64 and keeps every
+    intermediate bit-identical across engines and aggregation orders (same
+    reasoning as the fixed-point pagerank above; the DuckDB oracle unrolls
+    the identical recurrence). Headroom: raw sums are bounded by
+    max_degree * HITS_SCALE and the renormalization multiplies by
+    HITS_SCALE, so int64 holds while max_degree < 2^63 / HITS_SCALE^2 ~
+    9.2e6.
+
+    Scale shape per iteration: two equality joins of the static
+    (checkpointed) edge list against the current score table
+    (co-partitioned on the join key across rounds) + two
+    map-side-combinable groupBy sums + two tiny broadcast maxes.
+    """
+    return _hub_auth(edges, n_iter, damped=False)
+
+
+def salsa(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+    """Integer SALSA (Lempel & Moran 2000): returns (node, auth, hub).
+
+    HITS on the DEGREE-NORMALIZED bipartite random walk — each propagation
+    divides a node's score by its degree before it travels:
+    auth_i(v) = sum over u->v of hub_{i-1}(u) div outdeg(u);
+    hub_i(u)  = sum over u->v of auth_i(v) div indeg(v);
+    then each half-step max-normalizes to HITS_SCALE exactly like hits().
+    The normalization damps the tightly-knit-community effect that lets a
+    small dense subgraph capture HITS entirely. Truncating integer
+    division per NODE (before the edge join) is part of the value
+    contract the DuckDB twin reproduces bit-for-bit. Same plan shape and
+    int64 headroom as hits(), plus one degree aggregate per half-step;
+    contributions are <= HITS_SCALE.
+    """
+    return _hub_auth(edges, n_iter, damped=True)
 
 
 # ----------------------------------------------- HyperBall (neighborhood fn)
@@ -318,11 +311,7 @@ def hyperball_registers(edges: DataFrame, radius: int = 2) -> DataFrame:
     """
     from crawler_spark.operators.sketches import HLL_M, _h_sql, hll_rho
 
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(edges)
     # one hash expression, shared by register and rho — _h_sql is the same
     # portable-hash recipe hll_registers uses, so the register-exactness
     # invariant (state == hll_registers of the exact ball) holds by
@@ -384,80 +373,41 @@ def hyperball_summary(edges: DataFrame, radius: int = 2, top_n: int = 20) -> Dat
 
 # ----------------------------------------------------- seeded trust / spam
 
-def trustrank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    n_iter: int = 5,
-    scale: int = PR_SCALE,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
+def trustrank(edges: DataFrame, seeds: DataFrame, n_iter: int = 5) -> DataFrame:
     """Seeded-teleport PageRank — TrustRank (Gyongyi, Garcia-Molina &
     Pedersen, VLDB 2004): the biased power iteration that propagates trust
     from a vetted seed set instead of teleporting uniformly, the standard
     web-spam demotion signal a production crawl applies to its link table
     (the reference materializes that table — storage/database.py link rows —
-    but never ranks it; see module doc).
+    but never ranks it; see module doc). Returns (node, trust).
 
-        r0(v)  = scale                if v in seeds else 0
-        r_i(v) = seed(v)*(15*scale) DIV 100
+        r0(v)  = PR_SCALE             if v in seeds else 0
+        r_i(v) = seed(v)*(15*PR_SCALE) DIV 100
                  + (85 * sum_{u->v} (r_{i-1}(u) DIV out(u))) DIV 100
 
-    Same exact-int64 fixed-point convention as :func:`pagerank` (module doc:
-    floor division makes every intermediate bit-identical across engines and
-    partitionings, so the DuckDB oracle can value-hash actual trust scores).
-    Nodes never reached from the seed set get trust exactly 0 — the spam-mass
-    reading is pr - trust. ``seeds`` is a 1-column (node) DataFrame; it is
-    joined once to the node set (broadcast when small) and the per-iteration
-    plan is the identical edges-vs-ranks equality join as pagerank, so every
-    scale property (co-partitioned joins, map-side partial aggs,
-    checkpoint_every lineage truncation) carries over unchanged.
+    The same :func:`_seeded_rank` loop as :func:`pagerank` (which is the
+    all-seeds case), so every exactness and scale property carries over.
+    Nodes never reached from the seed set get trust exactly 0 — the
+    spam-mass reading is pr - trust. ``seeds`` is a 1-column (node)
+    DataFrame, joined once to the node set (broadcast when small).
     """
-    if checkpoint_every is None:
-        checkpoint_every = 0 if n_iter <= 8 else 3
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    contrib_src = e.join(deg, "src")
+    e = edges.select("src", "dst").distinct()
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        # seeds belong to the node set by definition (r0(v)=scale) — an
+        # seeds belong to the node set by definition (r0(v)=PR_SCALE) — an
         # edgeless seed must still carry its teleport trust, not vanish
-        .union(seed_nodes)
+        _nodes(e).union(seed_nodes)
         .distinct()
         .join(seed_nodes.withColumn("_seed", F.lit(1)), "node", "left")
         .select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
     )
-    teleport = (15 * scale) // 100
-    ranks = nodes.select(
-        "node", (F.col("_seed").cast("long") * scale).alias("pr")
-    )
-    for i in range(n_iter):
-        sums = (
-            contrib_src.join(ranks, contrib_src.src == ranks.node)
-            .select("dst", F.expr("pr DIV outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
-        )
-        ranks = nodes.join(sums, nodes.node == sums.dst, "left").select(
-            "node",
-            (
-                F.col("_seed").cast("long") * teleport
-                + F.expr("(85 * coalesce(m, 0L)) DIV 100")
-            ).cast("long").alias("pr"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
+    ranks = _seeded_rank(_contrib(e), nodes, n_iter)
     return ranks.select("node", F.col("pr").alias("trust"))
 
 
 # ----------------------------------------------------- community detection
 
-def label_propagation(
-    edges: DataFrame, n_iter: int = 3, checkpoint_every: int | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan, Albert &
     Kumara 2007) over the undirected link graph — the near-linear community
     detector a crawl analyst runs to segment the discovered web into site
@@ -479,8 +429,6 @@ def label_propagation(
     structures is bounded by the fixed n_iter (no convergence loop —
     callers wanting convergence add the neardup_clusters-style guard).
     """
-    if checkpoint_every is None:
-        checkpoint_every = 0 if n_iter <= 8 else 3
     und = undirect(edges)
     adj = und.select(F.col("lo").alias("node"), F.col("hi").alias("nbr")).union(
         und.select(F.col("hi").alias("node"), F.col("lo").alias("nbr"))
@@ -495,13 +443,13 @@ def label_propagation(
             .groupBy("node", "label")
             .agg(F.count("*").alias("c"))
         )
-        labels = (
+        labels = _truncated(
             counts.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select("node", "label")
+            .select("node", "label"),
+            i,
+            n_iter,
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            labels = labels.localCheckpoint(eager=False)
     return labels
 
 
@@ -519,22 +467,15 @@ def community_sizes(edges: DataFrame, n_iter: int = 3, top_n: int = 20) -> DataF
 
 # ----------------------------------------------------- online importance
 
-def opic(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    n_iter: int = 5,
-    scale: int = PR_SCALE,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
+def opic(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """OPIC — On-line Page Importance Computation (Abiteboul, Preda &
     Cobena, WWW 2003): the cash/history importance measure a crawler can
     maintain WHILE crawling, without waiting for a full PageRank batch.
-    Each node starts with ``scale`` cash; every (synchronous) round it
+    Each node starts with PR_SCALE cash; every (synchronous) round it
     banks its cash into its history and distributes it equally to its
     out-neighbors:
 
-        C_0(v) = scale,  H_0(v) = 0
+        C_0(v) = PR_SCALE,  H_0(v) = 0
         C_{i+1}(v) = sum_{u->v} C_i(u) DIV out(u)
         H_{i+1}(v) = H_i(v) + C_i(v)
         importance = H_n + C_n
@@ -547,41 +488,25 @@ def opic(
     omitted so the recurrence stays local — documented drain, same policy
     as pagerank's dropped dangling mass).
 
-    Scale: per round, the identical co-partitioned edges-vs-state equality
-    join + groupBy(dst) partial-agg sum as pagerank, plus a node-keyed
-    join to roll the history forward; ``checkpoint_every`` truncates
-    lineage on long runs (auto beyond 8 iterations).
+    Scale: per round, pagerank's :func:`_spread` step plus a node-keyed
+    join to roll the history forward; lineage follows :func:`_truncated`.
     """
-    if checkpoint_every is None:
-        checkpoint_every = 0 if n_iter <= 8 else 3
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    contrib_src = e.join(deg, "src")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    state = nodes.select(
-        "node", F.lit(scale).cast("long").alias("c"), F.lit(0).cast("long").alias("h")
+    e = edges.select("src", "dst").distinct()
+    contrib = _contrib(e)
+    state = _nodes(e).select(
+        "node", F.lit(PR_SCALE).cast("long").alias("c"), F.lit(0).cast("long").alias("h")
     )
     for i in range(n_iter):
-        sums = (
-            contrib_src.join(state, contrib_src.src == state.node)
-            .select("dst", F.expr("c DIV outdeg").alias("_m"))
-            .groupBy("dst")
-            .agg(F.sum("_m").alias("m"))
-        )
-        state = (
-            state.join(sums, state.node == sums.dst, "left")
-            .select(
+        sums = _spread(contrib, state, "c")
+        state = _truncated(
+            state.join(sums, state.node == sums.dst, "left").select(
                 "node",
                 F.coalesce(F.col("m"), F.lit(0)).cast("long").alias("c"),
                 (F.col("h") + F.col("c")).cast("long").alias("h"),
-            )
+            ),
+            i,
+            n_iter,
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            state = state.localCheckpoint(eager=False)
     return state.select(
         "node", "c", "h", (F.col("c") + F.col("h")).cast("long").alias("importance")
     )
@@ -632,12 +557,7 @@ def kcore_peel(
     )
 
 
-def resolve_redirects(
-    edges: DataFrame,
-    max_hops: int = 16,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def resolve_redirects(edges: DataFrame, max_hops: int = 16) -> DataFrame:
     """Resolve every redirect SOURCE to its terminal target by POINTER
     DOUBLING — the O(log L) plan for chain-following, vs the O(L) one-hop
     walk a naive loop (or the DuckDB twin's recursive CTE) performs.
@@ -668,9 +588,7 @@ def resolve_redirects(
 
     rounds = max(1, math.ceil(math.log2(max(2, max_hops)))) + 1
     ptr = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("cur"),
-        F.lit(1).cast("long").alias("hops"),
+        "src", F.col("dst").alias("cur"), F.lit(1).cast("long").alias("hops")
     )
     for _ in range(rounds):
         nxt = ptr.select(
@@ -688,7 +606,7 @@ def resolve_redirects(
             )
             .localCheckpoint(eager=False)  # truncate the doubling lineage
         )
-    domain = edges.select(F.col(src_col).alias("cur")).distinct()
+    domain = edges.select(F.col("src").alias("cur")).distinct()
     resolved = ptr.join(domain, "cur", "left_anti").select(
         "src", F.col("cur").alias("final"), "hops"
     )

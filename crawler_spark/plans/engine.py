@@ -188,7 +188,7 @@ def run_crawl(
         # not race a live round's staged files), then bring an older catalog
         # layout up to date
         catalog.cleanup_orphan_seen()
-        migrate_to_latest(spark, workdir)
+        migrate_to_latest(spark, workdir, n_seen_buckets=cfg.n_seen_buckets)
 
     # the page budget across resume: every current manifest carries the
     # cumulative counter, which survives expire_snapshots' truncation

@@ -74,31 +74,6 @@ def streaming_url_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFra
     )
 
 
-def _slot_rows(host, frames, last, has_delay, default_delay):
-    """Per-host politeness slotting shared by BOTH stateful-gate API
-    generations (politeness_gate / politeness_gate_tws): sort the batch by
-    (event_ts, canonical), then eff = max(ts, last + delay) per row.
-    Returns (out_rows, last). One copy of the algorithm — the two gates
-    keep only their state-API plumbing."""
-    import pandas as pd
-
-    rows = pd.concat(frames) if frames else None
-    out = []
-    if rows is not None and len(rows):
-        rows = rows.sort_values(["event_ts", "canonical"])
-        for r in rows.itertuples(index=False):
-            ts = r.event_ts.timestamp()
-            delay = (
-                float(r.crawl_delay)
-                if has_delay and r.crawl_delay == r.crawl_delay  # not NaN
-                else default_delay
-            )
-            eff = ts if last is None else max(ts, last + delay)
-            out.append((host, r.canonical, eff))
-            last = eff
-    return out, last
-
-
 _UNITS = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
           "hour": 3600, "hours": 3600, "day": 86400, "days": 86400}
 
@@ -195,7 +170,21 @@ def politeness_gate(
             state.remove()
             return
         last = state.get[0] if state.exists else None
-        out, last = _slot_rows(host, list(pdfs), last, has_delay, default_delay)
+        frames = list(pdfs)
+        out = []
+        if frames:
+            # within the batch: (event_ts, canonical) order, then
+            # eff = max(ts, last + delay) per row
+            rows = pd.concat(frames).sort_values(["event_ts", "canonical"])
+            for r in rows.itertuples(index=False):
+                ts = r.event_ts.timestamp()
+                delay = (
+                    float(r.crawl_delay)
+                    if has_delay and r.crawl_delay == r.crawl_delay  # not NaN
+                    else default_delay
+                )
+                last = ts if last is None else max(ts, last + delay)
+                out.append((host, r.canonical, last))
         if last is not None:
             state.update((float(last),))
             # evict once the host is idle past the watermark horizon
@@ -212,84 +201,6 @@ def politeness_gate(
             stateStructType="last_ts double",
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def politeness_gate_tws(
-    stream: DataFrame,
-    default_delay: float = 1.0,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of :func:`politeness_gate` — the
-    successor stateful-processor API (Spark 4 transformWithState): identical
-    slotting semantics, state as an explicit ValueState handle instead of
-    the applyInPandasWithState closure. Kept alongside the original so the
-    engine runs on both API generations; the test asserts output equality.
-
-    State is bounded exactly like the original's event-time timeout: every
-    batch re-registers a single event-time timer at ``last_fetch +
-    watermark``; when it fires past the watermark the host's state (and the
-    timer) is deleted — an idle host costs nothing (ADVICE r2: the first
-    version registered no timers, so state grew per host forever).
-
-    Environment note: transformWithState's Python worker needs the
-    ``protobuf`` package (its state protocol is proto-serialized), which
-    this sandbox does not ship and which the build rules forbid installing —
-    the equality test skips when ``google.protobuf`` is absent (a proven
-    sandbox impossibility, not an open TODO), exactly like the multimodal
-    codec stub. On a cluster with protobuf installed this path runs as-is;
-    the timer protocol below follows the public StatefulProcessorHandle API
-    (registerTimer/deleteTimer/listTimers + handleExpiredTimer).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    has_delay = "crawl_delay" in stream.columns
-    timeout_s = _duration_seconds(watermark)
-
-    class Gate(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("last_ts", "last_ts double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            (host,) = key
-            last = self._last.get()[0] if self._last.exists() else None
-            out, last = _slot_rows(
-                host, list(rows), last, has_delay, default_delay
-            )
-            if last is not None:
-                self._last.update((float(last),))
-                # single live timer per host: drop the old one, arm eviction
-                # at last_fetch + watermark (same horizon as the original's
-                # setTimeoutTimestamp)
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(int((last + timeout_s) * 1000))
-            yield pd.DataFrame(out, columns=["host", "canonical", "fetch_ts"])
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # idle past the watermark: evict the host's slot state entirely
-            self._last.clear()
-            self._handle.deleteTimer(expiredTimerInfo.getExpiryTimeInMs())
-            yield pd.DataFrame([], columns=["host", "canonical", "fetch_ts"])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.withColumn("event_ts", F.col("event_ts").cast("timestamp"))
-        .withWatermark("event_ts", watermark)
-        .groupBy("host")
-        .transformWithStateInPandas(
-            Gate(),
-            outputStructType="host string, canonical string, fetch_ts double",
-            outputMode="Append",
-            timeMode="EventTime",
         )
     )
 

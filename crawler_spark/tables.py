@@ -418,7 +418,6 @@ class SnapshotCatalog:
         self,
         spark: SparkSession,
         max_age_rounds: int | None = None,
-        horizon: float = 30.0,
     ) -> int:
         """X6 retention (reference cleanup worker, persistent_queue.py:263-296,
         database.py:717-736): drop completed/failed/skipped rows from the
@@ -432,7 +431,8 @@ class SnapshotCatalog:
         completed/failed rows. The age source is the crawl_order table (the
         exact round each URL was scheduled); rows never scheduled (robots-
         skipped) fall back to ``floor(scheduled_at / horizon)``, the round
-        they became eligible. ``None`` keeps the drop-all-bookkeeping
+        they became eligible, with the crawl's own horizon read back from
+        the committed round metrics. ``None`` keeps the drop-all-bookkeeping
         behavior.
 
         Safe by construction: scheduling reads only pending rows, dedup reads
@@ -458,10 +458,23 @@ class SnapshotCatalog:
             fr = frontier.join(last, "canonical", "left") if last is not None else (
                 frontier.withColumn("_last_round", F.lit(None).cast("int"))
             )
-            age_round = F.coalesce(
-                F.col("_last_round"),
-                F.floor(F.col("scheduled_at") / F.lit(horizon)).cast("int"),
+            # every committed round records t0 = round * horizon
+            horizon = next(
+                (h["t0"] / h["round"] for h in self.metrics_history()
+                 if h["round"] >= 1 and "t0" in h),
+                None,
             )
+            if horizon is None and self.current_round() >= 1:
+                raise ValueError(
+                    "cannot age never-scheduled rows: no committed round >= 1 "
+                    "is left in the history to give the crawl's horizon"
+                )
+            eligible = (
+                F.floor(F.col("scheduled_at") / F.lit(horizon)).cast("int")
+                if horizon
+                else F.lit(0)  # only round 0 has committed
+            )
+            age_round = F.coalesce(F.col("_last_round"), eligible)
             keep = fr.where(pending | (age_round >= F.lit(cutoff))).drop("_last_round")
         dropped = frontier.count() - keep.count()
         # tagged commit: the round's original manifest (with its per-round

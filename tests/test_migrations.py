@@ -125,7 +125,8 @@ def test_legacy_catalog_resumes_like_uninterrupted_crawl(spark, tmp_path):
     append table, no budget counter) resumes through run_crawl: the resume
     migrates it, and the crawl ends exactly where an uninterrupted crawl
     (the oracle simulator's) does, inside the page budget (migration 001
-    restores the counter)."""
+    restores the counter). The rebuilt url_seen keeps the crawl's own
+    (non-default) n_seen_buckets."""
     from crawler_spark.config import CrawlConfig
     from crawler_spark.plans.engine import read_crawl_order, run_crawl
     from crawler_spark.sources.corpus import gen_corpus, to_documents_df, to_robots_df
@@ -135,7 +136,7 @@ def test_legacy_catalog_resumes_like_uninterrupted_crawl(spark, tmp_path):
     args = (to_documents_df(spark, documents), to_robots_df(spark, robots), seeds)
 
     def cfg(rounds):
-        return CrawlConfig(max_pages=40, max_rounds=rounds, n_host_buckets=4)
+        return CrawlConfig(max_pages=40, max_rounds=rounds, n_host_buckets=4, n_seen_buckets=4)
 
     sim = CrawlSimulator(documents, seeds, robots, SimConfig(max_pages=40, max_rounds=6)).run()
 
@@ -164,3 +165,4 @@ def test_legacy_catalog_resumes_like_uninterrupted_crawl(spark, tmp_path):
     # the budget binds after the resume point: rounds 0-1 schedule 15 pages
     assert out["stopped"] == "max_pages" and out["scheduled_total"] <= 40
     assert migrations_status(wd)["pending"] == []
+    assert SnapshotCatalog(wd).current_manifest()["seen"]["buckets"] == 4

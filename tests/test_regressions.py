@@ -334,10 +334,12 @@ def test_compact_frontier_age_retention(spark, small, tmp_path):
     """X6 age cutoff (persistent_queue.py:263-296 24h analog, VERDICT r2 #6):
     max_age_rounds keeps RECENT completed/failed bookkeeping rows and drops
     only older ones; pending rows always survive; the resumed crawl is
-    unchanged."""
+    unchanged. Run at a non-default horizon: the never-scheduled rows' age
+    must come from the crawl's own horizon, not the config default."""
     docs_df, robots_df, seeds = small
-    cfg2 = CrawlConfig(max_pages=40, max_rounds=4, n_host_buckets=4)
-    cfg_full = CrawlConfig(max_pages=40, max_rounds=6, n_host_buckets=4)
+    horizon = 10.0
+    cfg2 = CrawlConfig(max_pages=40, max_rounds=4, n_host_buckets=4, horizon=horizon)
+    cfg_full = CrawlConfig(max_pages=40, max_rounds=6, n_host_buckets=4, horizon=horizon)
 
     ref = str(tmp_path / "ref")
     run_crawl(spark, ref, docs_df, robots_df, seeds, cfg_full)
@@ -354,7 +356,7 @@ def test_compact_frontier_age_retention(spark, small, tmp_path):
     cur = cat.current_round()
     # mirror the operator's age rule: last scheduled round from crawl_order,
     # falling back to the eligibility round for never-scheduled (skipped) rows
-    age = F.coalesce(F.col("lr"), F.floor(F.col("scheduled_at") / F.lit(30.0)).cast("int"))
+    age = F.coalesce(F.col("lr"), F.floor(F.col("scheduled_at") / F.lit(horizon)).cast("int"))
     recent_done = (
         frontier.where(F.col("status") != "pending")
         .join(last, "canonical", "left")

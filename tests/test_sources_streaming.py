@@ -314,53 +314,6 @@ def test_discover_sitemaps_probe_order_and_dedup(spark, tmp_path):
     assert read_crawl_order(spark, wd) == oracle.crawl_order
 
 
-def test_politeness_gate_tws_matches_applyinpandas(spark, tmp_path):
-    """The transformWithStateInPandas gate produces exactly the output of
-    the applyInPandasWithState gate on the same two-batch stream."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's worker protocol needs protobuf (not in sandbox)",
-    )
-    import pandas as pd
-
-    from crawler_spark.streaming.rollup import politeness_gate, politeness_gate_tws
-
-    base = pd.Timestamp("2026-01-01 00:00:00")
-    rows = [
-        ("a.test", "http://a.test/1", base.to_pydatetime()),
-        ("a.test", "http://a.test/2", (base + pd.Timedelta(seconds=0.5)).to_pydatetime()),
-        ("b.test", "http://b.test/1", base.to_pydatetime()),
-        ("a.test", "http://a.test/3", (base + pd.Timedelta(seconds=90)).to_pydatetime()),
-    ]
-    src = str(tmp_path / "src")
-    schema = "host string, canonical string, event_ts timestamp"
-    spark.createDataFrame(rows[:3], schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(rows[3:], schema).coalesce(1).write.mode("append").parquet(src)
-
-    results = {}
-    for name, gate in (("aip", politeness_gate), ("tws", politeness_gate_tws)):
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        out_dir, cp = str(tmp_path / f"out-{name}"), str(tmp_path / f"cp-{name}")
-        q = (
-            gate(stream, default_delay=2.0)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        results[name] = {
-            (r["host"], r["canonical"], r["fetch_ts"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-    assert results["aip"] == results["tws"] and len(results["aip"]) == 4
-
-
 def test_sitemapindex_yields_no_page_urls(spark):
     """Reference parity: parse_sitemap walks .//url/loc (robots.py:388-404),
     so a <sitemapindex> file — whose <loc> entries sit under <sitemap> —
